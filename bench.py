@@ -201,9 +201,10 @@ def main() -> None:
         # mixing best-of-2 kNN with single-trial others made the summed
         # headline internally inconsistent). Rationale: identical jobs
         # measured 5.6-40 s across windows on this shared host
-        # (scripts/probe_tune.py); min() keeps one co-tenant spike from
-        # reading as an engine regression. Both trials are recorded
-        # (trials field) so single-trial rounds remain comparable.
+        # (perfbench/ measures the run-to-run spread); min() keeps one
+        # co-tenant spike from reading as an engine regression. Both
+        # trials are recorded (trials field) so single-trial rounds
+        # remain comparable.
         t0 = time.time()
         cnt = queries[name](spark, sf_dir).count()
         t_first = time.time() - t0

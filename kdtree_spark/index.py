@@ -70,11 +70,11 @@ STATS_COLS = ["cell", "salt", "cnt", "nextra", "ntomb", "depth",
 
 HOT_CELL_CAP = 131_072  # rows per index blob before salting splits it
 
-COMPACT_EVERY = int(os.environ.get("KDS_COMPACT_EVERY", "8"))
+COMPACT_EVERY = 8
 # delta-update generations before a full compaction checkpoint
 
-PROBE_CAP = int(os.environ.get("KDS_PROBE_CAP", "1024"))
-PROBE_FRACTION = int(os.environ.get("KDS_PROBE_FRACTION", "32"))
+PROBE_CAP = 1024
+PROBE_FRACTION = 32
 # sample at least 1/PROBE_FRACTION of the blob's live points
 # live-sample points per blob for kNN bound-seeding (localtree.
 # probe_sample). The seed bound tightens as (blob/cap)^(1/d) in radius;

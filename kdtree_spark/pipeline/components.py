@@ -61,7 +61,8 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
     the larger endpoint; every smaller neighbor (and u) links to the
     minimum smaller neighbor.  Fixpoint = disjoint stars; convergence
     is detected EXACTLY (count + exceptAll on the canonical edge set,
-    both cheap at converged size), not via a hash fingerprint.
+    both cheap at converged size), not via a hash fingerprint; no
+    fixpoint within max_rounds raises RuntimeError.
     Every phase materializes through an eager localCheckpoint and
     unpersists the previous round (flat lineage AND flat storage)."""
     e = (edges.selectExpr(f"{a_col} AS u", f"{b_col} AS v")
@@ -87,19 +88,23 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
                 .selectExpr("GREATEST(a, b) AS u", "LEAST(a, b) AS v")
                 .distinct())
 
-    if e.count() > 0:
+    n = e.count()
+    if n > 0:
         for _ in range(max_rounds):
             ls = (large_star(e)
                   .selectExpr("GREATEST(u, v) AS u", "LEAST(u, v) AS v")
                   .distinct().localCheckpoint())
             nxt = small_star(ls).localCheckpoint()
             ls.unpersist()
-            same = (nxt.count() == e.count()
-                    and nxt.exceptAll(e).isEmpty())
+            n_nxt = nxt.count()
+            same = n_nxt == n and nxt.exceptAll(e).isEmpty()
             e.unpersist()
-            e = nxt
+            e, n = nxt, n_nxt
             if same:
                 break
+        else:
+            raise RuntimeError(
+                f"connected_components: no fixpoint in {max_rounds} rounds")
     # fixpoint: stars (member, comp_min) with member > comp_min
     lbl = (e.selectExpr("u AS id", "v AS comp")
            .groupBy("id").agg(F.min("comp").alias("comp")))

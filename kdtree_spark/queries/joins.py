@@ -79,6 +79,9 @@ def distance_join(left: DataFrame, right: DataFrame, r: int,
     second full-table join.
     """
     assert r >= 0
+    if left_id == right_id:
+        raise ValueError(f"distance_join: left_id and right_id are both "
+                         f"{left_id!r}; the output needs distinct names")
     if grid is None:
         # default: cell width ~ r, capped at a 4096-per-dim grid. The
         # cell is the candidate-blocking unit: with cw >> r every left
@@ -211,7 +214,7 @@ def closest_pair(left: DataFrame, right: DataFrame,
     (dist_sq, left_id, right_id) so the answer is a pure function of
     the data.
 
-    Radius doubling over distance_join: run the cell-blocked join at
+    Radius growth over distance_join: run the cell-blocked join at
     radius r, quadrupling r until a pair appears (O(log domain)
     rounds, each one equi-join; an empty round costs only the join
     metadata since nothing matches), then take the lexicographic min

@@ -31,15 +31,23 @@ cluster that sibling-pruning becomes *cell* pruning:
            (or ub = inf) instead broadcast-join the super-cell stats,
            keep super cells within ub, and explode only those into
            their fine children — never an O(#queries x #cells) plan.
-  phase 3  candidates shuffle to their cells; the blob side is PRUNED
-           FIRST by a broadcast semi-join on the distinct candidate
-           cells (the same pattern update() uses for touched cells), so
-           the bytes crossing the Arrow hop scale with candidate cells,
-           not index size; then per-blob batched tree search with ub as
-           the prune bound -> local top-k per cell
-  phase 4  global top-k: min-k over per-cell top-k's via a window on
-           (dist², nid) — deterministic tie-break identical to the
-           DuckDB oracle's ORDER BY
+  phase 3  candidates shuffle to their cells in ONE cogroup round;
+           the blob side is PRUNED FIRST by a broadcast semi-join on
+           the distinct candidate cells (the same pattern update() uses
+           for touched cells), so the bytes crossing the Arrow hop
+           scale with candidate cells, not index size; then per-blob
+           batched tree search with ub as the prune bound -> local
+           top-k per cell
+  phase 4  global top-k: queries that enumerated exactly one candidate
+           cell (fin0) keep their kernel ranks as final; the rest take
+           min-k over per-cell top-k's via a window on (dist², nid) —
+           deterministic tie-break identical to the DuckDB oracle's
+           ORDER BY
+
+The reference searches the child holding the query first
+(nn_search.hpp:107-125). A two-stage home-cell-first phase 3 scanned
+13-27% fewer points but ran 15-25% slower: the extra cogroup barrier
+costs more than the scans it saves at ~8k-point blobs.
 
 Exactness: any true neighbour at distance d <= true-kth <= ub lies in a
 cell whose bbox min-dist <= ub, so phase 2 never drops it; phase 3's
@@ -51,7 +59,6 @@ emitted as BIGINT so oracle hashes match bit-for-bit.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -131,13 +138,6 @@ def _coord_schema(index: SpatialIndex, cc: list) -> str:
     t = "double" if index.float_coords else "long"
     return ", ".join(f"{c} {t}" for c in cc)
 
-
-_BYPASS = os.environ.get("KDS_KNN_BYPASS", "1") != "0"
-# single-cell phase-4 bypass toggle (A/B instrument; on by default)
-
-_TIGHTEN_COLD = os.environ.get("KDS_KNN_TIGHTEN_COLD", "1") != "0"
-# cold-cogroup per-blob bound tighten toggle (A/B instrument; on by
-# default — see make_cell_knn)
 
 PROBE_POOL_CAP = 65536       # max pooled probe points per cell group
 # (a backstop for extreme salted cells: per-query bound cost is one
@@ -317,8 +317,8 @@ def _super_prefix_ub(index: SpatialIndex, needy: DataFrame, cc: list,
                 F.lit(float("inf"))).alias("ub")))
 
 
-def _candidate_cells(index: SpatialIndex, enum: DataFrame, cc: list,
-                     coord_schema: str, k: int) -> DataFrame:
+def _candidate_cells(index: SpatialIndex, enum: DataFrame, cc: list
+                     ) -> DataFrame:
     """Phase 2 (refinement side): (qid, coords, ub, cell, maxsalt)
     candidate pairs from the fused enumeration rows.
 
@@ -337,12 +337,9 @@ def _candidate_cells(index: SpatialIndex, enum: DataFrame, cc: list,
     stats = index.cell_stats()
     slo, shi = _super_cols(cc)
     mind2, _ = _bbox_exprs(cc, slo, shi)  # fine stats share these names
-    # mind2 rides along so phase 3 can re-prune sibling cells against
-    # the exact kth distance of the home-cell scan (home-first order);
     # fin0 is the enumeration-time single-candidate flag (see
     # _enum_rows) consumed by knn_join's merge bypass
-    keep = ["qid", *cc, "ub", "cell", "maxsalt", "fin0",
-            mind2.alias("mind2")]
+    keep = ["qid", *cc, "ub", "cell", "maxsalt", "fin0"]
 
     near_out = (enum.filter(F.col("cell") >= 0).join(stats, "cell")
                 .filter(mind2 <= F.col("ub")).select(*keep))
@@ -412,8 +409,7 @@ def knn_candidates(index: SpatialIndex, queries: DataFrame, k: int
     needy_enum = needy_ub.mapInPandas(
         gen,
         f"qid long, {coord_schema}, ub double, cell long, fin0 boolean")
-    return _candidate_cells(index, enum.unionByName(needy_enum), cc,
-                            coord_schema, k)
+    return _candidate_cells(index, enum.unionByName(needy_enum), cc)
 
 
 def _pruned_blob_sides(index: SpatialIndex, cand: DataFrame):
@@ -435,13 +431,13 @@ def _pruned_blob_sides(index: SpatialIndex, cand: DataFrame):
 
 
 def _cell_knn_maker(cc: list, cdt, k: int):
-    """Phase-3 kernel factory shared by knn_join / knn_scan_stats.
+    """Phase-3 kernel factory for knn_join.
 
     allow_fin=True on cold (one group per cell) cogroups: their kernel
-    ranks are exact within the group, so rows are bypass-eligible when
-    the optional per-row `_fin` input column agrees (absent = True).
-    Hot (per-blob) groups never emit fin rows. Cold groups also force
-    the per-blob block-scan bound tighten (see knn_join comments)."""
+    ranks are exact within the group, so a row is final when its
+    query's `fin0` flag says the cell was its only candidate. Hot
+    (per-blob) groups never emit fin rows. Cold groups also force the
+    per-blob block-scan bound tighten."""
     def make_cell_knn(allow_fin: bool):
         def cell_knn(key, qpdf: pd.DataFrame, ipdf: pd.DataFrame
                      ) -> pd.DataFrame:
@@ -451,15 +447,12 @@ def _cell_knn_maker(cc: list, cdt, k: int):
             qpts = qpdf[cc].to_numpy(cdt)
             ub = qpdf["ub"].to_numpy(np.float64)
             d, i = _group_knn(qpts, ipdf["blob"], k, ub,
-                              tighten=(allow_fin and _TIGHTEN_COLD) or None)
+                              tighten=True if allow_fin else None)
             m = len(qpdf)
             qid = np.repeat(qpdf["qid"].to_numpy(np.int64), k)
             rank = np.tile(np.arange(1, k + 1, dtype=np.int32), m)
-            if allow_fin and _BYPASS:
-                row_fin = (qpdf["_fin"].to_numpy(bool)
-                           if "_fin" in qpdf.columns else np.ones(m, bool))
-            else:
-                row_fin = np.zeros(m, bool)
+            row_fin = (qpdf["fin0"].to_numpy(bool) if allow_fin
+                       else np.zeros(m, bool))
             fin = np.repeat(row_fin, k)
             dd = d.ravel()
             ii = i.ravel()
@@ -489,28 +482,6 @@ def _scan_local(index: SpatialIndex, pairs: DataFrame, kernel_maker,
                 .applyInPandas(kernel_maker(False), out_schema)))
 
 
-_HOME_FIRST = os.environ.get("KDS_KNN_HOME_FIRST", "0") != "0"
-# Two-stage home-first scan order (A/B instrument; OFF by default).
-# Measured at sf0.1/Grid(8) d2, sf0.1/Grid(3,dims=4) d5 and 6M-row
-# Grid(28): scanned pts/query drops 13-27% (353->306 d2, 3731->2714
-# d5, 541->469 6M) but wall time RISES 15-25% every time — with ~8k-pt
-# blobs the numpy scan a sibling cell costs is cheaper than the extra
-# cogroup barrier + kth join the re-prune needs. The reference's
-# nearer-child-first order (nn_search.hpp:107-125) pays off in a
-# shared-memory pointer walk; in a distributed barrier model it only
-# wins when per-cell scan cost >> stage latency (huge blobs or very
-# expensive metrics) — flip on for those deployments.
-
-
-def _home_split(index: SpatialIndex, cand: DataFrame, cc: list):
-    """(home_pairs, sibling_pairs): a candidate pair is `home` when its
-    cell is the query's own grid cell — the distributed analogue of the
-    reference's nearer-child-first descent order (nn_search.hpp:107-125:
-    the child containing the query is searched before the sibling)."""
-    is_home = F.expr(f"cell = {index.cell_sql_nd(cc)}")
-    return cand.filter(is_home), cand.filter(~is_home)
-
-
 def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
     """queries: (qid long, <coord cols> long) -> (qid, rank, nid, dist_sq).
 
@@ -518,18 +489,13 @@ def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
     pruning (phase 2) uses only the grid dims — a lower bound on the
     full-d distance, so exactness is preserved for any d.
 
-    Phase 3 default: all candidate cells scan concurrently in ONE
-    cogroup round; queries with a single candidate cell (~85% on
-    uniform data) take their kernel-emitted ranks and skip the merge
-    window. KDS_KNN_HOME_FIRST=1 switches to a two-stage home-first
-    order (reference parity with nn_search.hpp's nearer-child-first
-    descent): stage A scans only each query's home cell, the exact kth
-    distance² of that scan re-prunes sibling pairs (mind2 <=
-    least(ub, kth), `<=` so equal-distance candidates survive the
-    (dist, id) tie-break), stage B scans survivors only. Measured
-    (see _HOME_FIRST): scans/query drop 13-27% but the extra barrier
-    costs more wall than the scans it saves at the ~8k-pt blob sizing
-    — off unless per-cell scan cost dwarfs stage latency."""
+    Phase 3: all candidate cells scan concurrently in ONE cogroup
+    round. Queries whose enumeration had exactly one candidate cell
+    (fin0, ~85% on uniform data; their home cell's ranks are globally
+    final, see _enum_rows) take their kernel-emitted ranks and skip the
+    merge window; no per-query candidate count is computed. Queries
+    whose extra enumerated cells drop in the stats join (~15% at d=2)
+    conservatively take the merge window — same results."""
     cc = list(index.coord_cols)
     # the cold/hot split and the blob semi-joins consume the candidate
     # set several times; checkpoint the (small, O(queries x
@@ -546,63 +512,16 @@ def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
     maker = _cell_knn_maker(cc, cdt, k)
     out_schema = "qid long, nid long, dist_sq double, rank int, fin boolean"
 
+    local = _scan_local(index, cand, maker, out_schema) \
+        .localCheckpoint(eager=False)
+    done = local.filter(F.col("fin"))
     w = Window.partitionBy("qid").orderBy(F.col("dist_sq").asc(),
                                           F.col("nid").asc())
+    merged = (local.filter(~F.col("fin"))
+              .withColumn("rank", F.row_number().over(w))
+              .filter(F.col("rank") <= k))
     dist = (F.col("dist_sq") if index.float_coords
             else F.col("dist_sq").cast("long"))
-
-    if not _HOME_FIRST:
-        # single-stage: all candidate cells scan concurrently; bypass
-        # queries whose ENUMERATION already had exactly one candidate
-        # cell (fin0, emitted by the fused kernel — their home cell's
-        # ranks are globally final, see _enum_rows). No per-query count
-        # is computed at all: the window/groupBy exchange over qid that
-        # previous rounds paid here is gone. Queries whose extra
-        # enumerated cells drop in the stats join (~15% at d=2)
-        # conservatively take the merge window — same results.
-        canded = cand.withColumn("_fin", F.col("fin0"))
-        local = _scan_local(index, canded, maker, out_schema) \
-            .localCheckpoint(eager=False)
-        done = local.filter(F.col("fin"))
-        merged = (local.filter(~F.col("fin"))
-                  .withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
-        return (done.unionByName(merged)
-                .select("qid", "rank", "nid", dist.alias("dist_sq")))
-
-    home, sibs = _home_split(index, cand, cc)
-    # ---- stage A: home cells only
-    localA = _scan_local(index, home, maker, out_schema) \
-        .localCheckpoint(eager=False)
-    # exact kth distance² from cold (single-group) home scans: the k-th
-    # row's dist IS the kth-best among the home cell's live points.
-    # Salted-home queries contribute no kth (their per-blob ranks
-    # overlap) and fall back to the phase-1 ub — they are the dense
-    # minority where sibling cells rarely survive mind2 <= ub anyway.
-    kth = (localA.filter(F.col("fin") & (F.col("rank") == k))
-           .select("qid", F.col("dist_sq").alias("kth")))
-    # ---- stage B: siblings that survive the tightened bound
-    sibs2 = (sibs.join(kth, "qid", "left")
-             .filter(F.col("mind2")
-                     <= F.least(F.col("ub"),
-                                F.coalesce(F.col("kth"),
-                                           F.lit(float("inf")))))
-             .withColumn("ub", F.least(F.col("ub"),
-                                       F.coalesce(F.col("kth"),
-                                                  F.lit(float("inf")))))
-             .drop("kth")
-             .withColumn("_fin", F.lit(False))
-             .localCheckpoint(eager=False))
-    localB = _scan_local(index, sibs2, maker, out_schema)
-    # queries with NO surviving sibling AND a single-group home scan
-    # keep their kernel ranks; everything else merges exactly
-    bq = sibs2.select("qid").distinct()
-    done = localA.filter(F.col("fin")).join(bq, "qid", "anti")
-    rest = (localA.filter(F.col("fin")).join(bq, "qid", "semi")
-            .unionByName(localA.filter(~F.col("fin")))
-            .unionByName(localB))
-    merged = (rest.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= k))
     return (done.unionByName(merged)
             .select("qid", "rank", "nid", dist.alias("dist_sq")))
 
@@ -644,50 +563,23 @@ def knn_scan_stats(index: SpatialIndex, queries: DataFrame, k: int
     def make_cell_count(allow_fin: bool):
         # mirror knn_join's tighten flags (cold forces the block-scan
         # tighten; its scanned points are counted via knn_bound's stats
-        # hook, so the audit reflects ALL distance comparisons). Cold
-        # groups also emit the exact kth distance² (kth = -1 when
-        # unavailable: hot group, or < k finite results) so the
-        # home-first audit can re-prune stage B like knn_join does.
+        # hook, so the audit reflects ALL distance comparisons)
         def cell_count(key, qpdf: pd.DataFrame, ipdf: pd.DataFrame
                        ) -> pd.DataFrame:
             if len(qpdf) == 0 or len(ipdf) == 0:
-                return pd.DataFrame(
-                    columns=["qid", "scanned", "leaves", "kth"])
+                return pd.DataFrame(columns=["qid", "scanned", "leaves"])
             qpts = qpdf[cc].to_numpy(cdt)
             ub = qpdf["ub"].to_numpy(np.float64)
             st: dict = {}
-            d, _ = _group_knn(qpts, ipdf["blob"], k, ub, stats=st,
-                              tighten=(allow_fin and _TIGHTEN_COLD)
-                              or None)
-            kd = d[:, k - 1]
-            kth = (np.where(np.isfinite(kd), kd, -1.0) if allow_fin
-                   else np.full(len(qpdf), -1.0))
+            _group_knn(qpts, ipdf["blob"], k, ub, stats=st,
+                       tighten=True if allow_fin else None)
             return pd.DataFrame({"qid": qpdf["qid"].to_numpy(np.int64),
                                  "scanned": st["scanned"],
-                                 "leaves": st["leaves"],
-                                 "kth": kth})
+                                 "leaves": st["leaves"]})
         return cell_count
 
-    cnt_schema = "qid long, scanned long, leaves long, kth double"
-    if not _HOME_FIRST:
-        per_cell = _scan_local(index, cand, make_cell_count, cnt_schema)
-    else:
-        home, sibs = _home_split(index, cand, cc)
-        perA = _scan_local(index, home, make_cell_count, cnt_schema) \
-            .localCheckpoint(eager=False)
-        kth = (perA.filter(F.col("kth") >= 0)
-               .groupBy("qid").agg(F.min("kth").alias("kth2")))
-        sibs2 = (sibs.join(kth, "qid", "left")
-                 .filter(F.col("mind2")
-                         <= F.least(F.col("ub"),
-                                    F.coalesce(F.col("kth2"),
-                                               F.lit(float("inf")))))
-                 .withColumn("ub", F.least(F.col("ub"),
-                                           F.coalesce(F.col("kth2"),
-                                                      F.lit(float("inf")))))
-                 .drop("kth2"))
-        perB = _scan_local(index, sibs2, make_cell_count, cnt_schema)
-        per_cell = perA.unionByName(perB)
+    per_cell = _scan_local(index, cand, make_cell_count,
+                           "qid long, scanned long, leaves long")
     return (per_cell.groupBy("qid")
             .agg(F.sum("scanned").alias("scanned"),
                  F.sum("leaves").alias("leaves")))

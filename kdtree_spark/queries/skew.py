@@ -14,8 +14,6 @@ on one thread either, kdTreeParallel.h build/query par_do recursion).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,7 +26,7 @@ from ..index import SpatialIndex
 # an extra merge shuffle — pure overhead unless the cell dominates the
 # workload. Genuinely hot cells (varden-style clusters, many blobs)
 # still fan out to one task per blob.
-FANOUT_MIN_BLOBS = int(os.environ.get("KDS_FANOUT_MIN_BLOBS", "4"))
+FANOUT_MIN_BLOBS = 4
 
 
 def hot_blobs(index: SpatialIndex) -> DataFrame:

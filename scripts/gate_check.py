@@ -45,7 +45,7 @@ def main(names=None):
     for n, fn in full.items():
         qs.setdefault(n, fn)
     oracles = {**spatial.ORACLES, **pipeline.ORACLES, **imaging.ORACLES}
-    spark = get_spark("gate-check", cpus=8, shuffle_partitions=8)
+    spark = get_spark("gate-check", cpus=None, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from kdtree_spark.pipeline.components import connected_components
 
@@ -48,6 +49,14 @@ def test_components_long_path_exercises_jump(spark):
     edges = [(i, i + 1) for i in range(399)]
     got = dict(connected_components(_mk_edges(spark, edges)).collect())
     assert got == {i: 0 for i in range(400)}
+
+
+def test_components_round_cap_raises(spark):
+    """A path that cannot contract to stars in one round must fail
+    loudly, not return a partial labelling."""
+    edges = [(i, i + 1) for i in range(399)]
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(_mk_edges(spark, edges), max_rounds=1)
 
 
 def test_components_singletons_and_empty_edges(spark):

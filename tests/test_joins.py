@@ -100,6 +100,14 @@ def test_distance_join_r0_and_default_grid(spark):
     assert got == [(0, 5, 0), (0, 6, 0), (2, 8, 0)]
 
 
+def test_distance_join_same_id_names_rejected(spark):
+    """One name for both id columns would emit two `pid` columns."""
+    P = np.array([[0, 10, 10], [1, 20, 30]])
+    df = _mk(spark, P, "pid", ("x", "y"))
+    with pytest.raises(ValueError, match="left_id and right_id"):
+        distance_join(df, df, 5, left_id="pid", right_id="pid")
+
+
 def test_distance_join_count_zero_rows(spark):
     """Count variant: zero-neighbor lefts report cnt=0 (LEFT join)."""
     rng = np.random.default_rng(23)

@@ -120,34 +120,29 @@ def test_large_grid_pyramid_paths(spark, sf_dir):
     idx.unpersist()
 
 
-def test_home_first_knn_matches_default(spark, sf_dir):
-    """KDS_KNN_HOME_FIRST two-stage scan order (stage A home cell ->
-    exact-kth re-prune -> stage B survivors) must return exactly the
-    default single-stage plan's results, on uniform and varden (salted
-    home cells exercise the no-kth fallback) and at k above
-    points-per-cell (stage A emits < k rows -> kth = inf)."""
-    import kdtree_spark.queries.knn as K
-    from kdtree_spark import points
+def test_knn_varden_grid8_matches_bruteforce(spark, sf_dir):
+    """The single-stage kNN plan on clustered varden data: on-point
+    queries in dense home cells, salted into several blobs by a small
+    hot_cell_cap (cold multi-blob and fanned-out hot cells both occur),
+    and k above points-per-cell (the home cell alone cannot fill the
+    top-k, so sibling cells must merge through the window)."""
     pts = points.load_points(spark, sf_dir, "varden").select("pid", "x", "y")
-    idx = SpatialIndex.build(spark, pts, grid=Grid(8))
+    idx = SpatialIndex.build(spark, pts, grid=Grid(8), hot_cell_cap=64)
+    assert idx.cell_stats().agg(F.max("maxsalt")).collect()[0][0] >= 1
     pdf = pts.toPandas()
     P = pdf[["x", "y"]].to_numpy(np.int64)
     ids = pdf["pid"].to_numpy(np.int64)
     q = spark.createDataFrame(
         [(int(i), int(x), int(y)) for i, (x, y) in enumerate(P[:16])],
         "qid long, x long, y long")
-    saved = K._HOME_FIRST
-    try:
-        for k in (1, 10, 200):
-            K._HOME_FIRST = True
-            hf = K.knn_join(idx, q, k).toPandas()
-            for qi in range(16):
-                d2 = ((P - P[qi]) ** 2).sum(axis=1)
-                order = np.lexsort((ids, d2))[:k]
-                mine = hf[hf.qid == qi].sort_values("rank")
-                assert list(mine["nid"]) == list(ids[order]), (k, qi)
-    finally:
-        K._HOME_FIRST = saved
+    for k in (1, 10, 200):
+        got = knn_join(idx, q, k).toPandas()
+        for qi in range(16):
+            d2 = ((P - P[qi]) ** 2).sum(axis=1)
+            order = np.lexsort((ids, d2))[:k]
+            mine = got[got.qid == qi].sort_values("rank")
+            assert list(mine["nid"]) == list(ids[order]), (k, qi)
+            assert list(mine["dist_sq"]) == list(d2[order]), (k, qi)
     idx.unpersist()
 
 
