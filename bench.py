@@ -164,32 +164,24 @@ def main() -> None:
                 extras["knn_k10_varden_cells_per_query"] = round(
                     knn_candidates(dq._INDEX_CACHE[vkey], qv, 10).count()
                     / nq, 2)
-            for dname, getter in (("d3", dq.get_index_d3),
-                                  ("d5", dq.get_index_d5)):
-                key = (id(spark), sf_dir, dname)
+            for spec in (dq.D3, dq.D5):
+                key = (id(spark), sf_dir, spec.name)
                 if key in dq._INDEX_CACHE:
-                    idxd = dq._INDEX_CACHE[key]
-                    cc = list(idxd.coord_cols)
-                    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-                    li.createOrReplaceTempView("_bench_li")
-                    sel = ", ".join(
-                        f"{e} AS {c}" for c, e in zip(
-                            points.D5_COLS[:len(cc)], points.D5_EXPRS))
-                    qd = spark.sql(
-                        f"SELECT {points.PID_SQL} AS qid, {sel} "
-                        f"FROM _bench_li WHERE {points.QUERY_FILTER_SQL}")
-                    extras[f"knn_k10_{dname}_cells_per_query"] = round(
-                        knn_candidates(idxd, qd, 10).count() / nq, 2)
+                    qd = points.load_query_points(spark, sf_dir,
+                                                  dims=spec.dims)
+                    extras[f"knn_k10_{spec.name}_cells_per_query"] = round(
+                        knn_candidates(dq._INDEX_CACHE[key], qd, 10).count()
+                        / nq, 2)
             # salted fan-out path (extras-only so the headline sum stays
             # comparable round-over-round): trial 1 includes the
             # hot_cell_cap=512 varden build, trial 2 reuses the cached
             # salted index and times the (cell, salt) fan-out query alone
             t0 = time.time()
-            dq.q_hot_cell_knn(spark, sf_dir).count()
+            dq.QUERIES["hot_cell_knn"](spark, sf_dir).count()
             extras["hot_cell_knn_build_and_query_sec"] = round(
                 time.time() - t0, 3)
             t0 = time.time()
-            dq.q_hot_cell_knn(spark, sf_dir).count()
+            dq.QUERIES["hot_cell_knn"](spark, sf_dir).count()
             hot2 = time.time() - t0
             extras["hot_cell_knn_query_sec"] = round(hot2, 3)
             extras["hot_cell_knn_q_per_sec"] = round(nq / hot2, 1)

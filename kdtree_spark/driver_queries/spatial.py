@@ -1,22 +1,33 @@
-"""Driver-gate spatial queries: each returns a DataFrame and has a
-matching DuckDB oracle SQL over the same parquet views.
+"""Driver-gate spatial queries: each gate is a `(spark, sf_dir) ->
+DataFrame` callable plus a DuckDB oracle SQL over the same parquet.
 
-Every callable takes (spark, sf_dir). Outputs use BIGINT columns with
-names identical to the oracle's aliases (the driver hash-compares after
-sorting columns by name).
+Outputs use BIGINT columns with names identical to the oracle's aliases
+(the driver hash-compares after sorting columns by name).
 
-The index is memoized per (sf_dir, dist) so the driver's sequential
-query runs don't rebuild it each time.
+Every point set is one `PointSpec` row — dims, distribution, coordinate
+type, grid and salting cap — and the same row derives its Spark points,
+query sample, insert/delete batches and oracle SQL, the way the
+reference serves every dimension and coordinate type from one
+dim-templated path (tests/test.cpp:569-617, comparator.h:10-79). The
+index over a spec is memoized per (session, sf_dir, spec name) so the
+driver's sequential query runs don't rebuild it.
+
+The oracle generators (`live_sql`, `knn_sql`, `box_count_sql`,
+`box_report_sql`, `circle_count_sql`) build SQL from `points` and
+`fixtures` only, never from the engine, so DuckDB stays an independent
+reference.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fixtures, points
 from ..grid import Grid
-from ..index import SpatialIndex
+from ..index import HOT_CELL_CAP, SpatialIndex
 from ..queries.joins import distance_join, rect_join
 from ..queries.knn import knn_join
 from ..queries.polygon import (point_in_polygon, polygon_join,
@@ -26,8 +37,6 @@ from ..queries.polygon import (point_in_polygon, polygon_join,
 from ..queries.ranges import circle_count, range_count, range_report
 
 GRID_G = 8  # fixed grid for driver queries: 64 cells, sf-independent
-GRID_G_3D = 4  # d>=3 indexes key cells on 3 dims: 4^3 = 64 cells, the
-# same cell budget as the 2-D Grid(8)
 
 BOXES = fixtures.gen_boxes(30)
 BOXES_SMALL = fixtures.gen_boxes(12)
@@ -35,299 +44,291 @@ BOXES_10K = fixtures.gen_boxes(10000)  # H4 rangeCountFix scale
 # H5 rangeQueryFix scale: 10,000 small-bracket rects, so the REPORT
 # output stays ~n^(1/4) rows per box (reference type-0 rectangles)
 BOXES_10K_REPORT = fixtures.gen_boxes(10000, seed=77, classes=(0,))
+BOXES_D5 = fixtures.gen_boxes_d(24, 5)
 CIRCLES = fixtures.gen_circles(15)
+CIRCLES_D5 = fixtures.gen_circles_d(15, 5)
 POLYGONS = fixtures.gen_polygons(8)
 TILES = fixtures.gen_tiles(12)
+POLY_A = fixtures.gen_convex_polygons(40, seed=61)
+POLY_B = fixtures.gen_convex_polygons(60, seed=62)
+
+QUERY = points.QUERY_FILTER_SQL  # ~1% query sample
+PROBE = points.PROBE_FILTER_SQL  # ~0.1% probe set (H8/H9 step probes)
+KNN_GRAPH_FILTER = f"({points.PID_SQL} % 211 = 3)"  # ~0.5% of nodes
+
+
+# ---------------------------------------------------------------- point sets
+
+@dataclass(frozen=True)
+class PointSpec:
+    """One gated point set: its SQL (points, query sample, I1/D1
+    batches) over lineitem and the index built over it."""
+    name: str
+    dims: int = 2
+    dist: str = "uniform"
+    f64: bool = False
+    grid: Grid = Grid(GRID_G)
+    hot_cell_cap: int = HOT_CELL_CAP
+
+    @property
+    def cols(self) -> tuple:
+        return points.dim_cols(self.dims)
+
+    def points_sql(self, table: str = "lineitem") -> str:
+        return points.points_sql(table, self.dist, self.dims, self.f64)
+
+    def queries_sql(self, table: str = "lineitem", where: str = QUERY) -> str:
+        return points.query_points_sql(table, self.dist, dims=self.dims,
+                                       f64=self.f64, where=where)
+
+    def insert_sql(self, table: str = "lineitem") -> str:
+        return points.insert_batch_sql(table, self.dims, self.f64)
+
+    def delete_sql(self, table: str = "lineitem") -> str:
+        return points.delete_batch_sql(table, self.dims, self.dist, self.f64)
+
+
+UNIFORM = PointSpec("uniform")
+VARDEN = PointSpec("varden", dist="varden")
+# hot_cell_cap=512 salts the dense varden cells into >= 4 blobs, so kNN
+# takes the (cell, salt) fan-out branch (queries/skew.py
+# FANOUT_MIN_BLOBS); at the default 131,072-row cap no gate-scale cell
+# ever salts
+VARDEN_HOT = PointSpec("varden_hot512", dist="varden", hot_cell_cap=512)
+# 3-D cell key (same ~64-cell budget as the 2-D Grid(8)): the candidate
+# region prunes in three dims, not a z-degenerate two
+D3 = PointSpec("d3", dims=3, grid=Grid(4, dims=3))
+# 4-D cell key, 3^4 = 81 cells (~the 64-cell budget): measured sweep at
+# sf0.1 — (4,3)=4.34, (3,4)=3.74, (2,5)=2.85 candidate cells/query;
+# (3,4) meets the <4 target with 81-cell parallelism and the fastest
+# kNN wall of the >=64-cell options
+D5 = PointSpec("d5", dims=5, grid=Grid(3, dims=4))
+D16 = PointSpec("d16", dims=16, grid=Grid(4, dims=3))
+# float-coordinate mode: double coords end to end (the reference's
+# double test build, comparator.h:10-79; tests/testFramework.h:19-20) —
+# blobs, stats, probes and distances all run in IEEE float64, and
+# dist_sq stays DOUBLE. Tie-break rule divergence vs the reference: the
+# reference's Num_Comparator treats |a-b| < eps as equal and breaks
+# remaining ties by point order; here (and in the DuckDB oracle) floats
+# compare exactly and ties break on (dist_sq, nid) — points whose
+# distances differ by < eps can therefore rank in the opposite order
+# from the reference, though identically to any engine doing exact IEEE
+# comparison.
+F64 = PointSpec("f64", f64=True)
+
+SPECS = {s.name: s for s in (UNIFORM, VARDEN, VARDEN_HOT, D3, D5, D16, F64)}
 
 _INDEX_CACHE: dict = {}
 
 
-def get_index(spark: SparkSession, sf_dir: str, dist: str = "uniform"
+def _frame(spark: SparkSession, sf_dir: str, sql_of, *args) -> DataFrame:
+    """Run one of a spec's SQL builders over sf_dir's lineitem."""
+    return spark.sql(sql_of(points.lineitem_view(spark, sf_dir), *args))
+
+
+def build_index(spark: SparkSession, sf_dir: str, spec: PointSpec
+                ) -> SpatialIndex:
+    pts = _frame(spark, sf_dir, spec.points_sql).select("pid", *spec.cols)
+    return SpatialIndex.build(spark, pts, grid=spec.grid,
+                              hot_cell_cap=spec.hot_cell_cap,
+                              coord_cols=spec.cols)
+
+
+def index_for(spark: SparkSession, sf_dir: str, spec: PointSpec
               ) -> SpatialIndex:
-    key = (id(spark), sf_dir, dist)
+    key = (id(spark), sf_dir, spec.name)
     if key not in _INDEX_CACHE:
-        pts = points.load_points(spark, sf_dir, dist).select("pid", "x", "y")
-        _INDEX_CACHE[key] = SpatialIndex.build(spark, pts, grid=Grid(GRID_G))
+        _INDEX_CACHE[key] = build_index(spark, sf_dir, spec)
     return _INDEX_CACHE[key]
 
 
-def _pts_sql(dist: str = "uniform") -> str:
-    return f"SELECT {points.points_select_sql(dist)} FROM lineitem"
+def _updated_index(spark, sf_dir, spec: PointSpec, inserts: bool,
+                   deletes: bool) -> SpatialIndex:
+    """The memoized index, after the spec's I1/D1 batches if asked."""
+    idx = index_for(spark, sf_dir, spec)
+    if not (inserts or deletes):
+        return idx
+    return idx.update(
+        inserts=_frame(spark, sf_dir, spec.insert_sql) if inserts else None,
+        deletes=_frame(spark, sf_dir, spec.delete_sql) if deletes else None)
 
 
-def _q_sql(dist: str = "uniform", qdist: str | None = None) -> str:
-    return points.query_points_sql("lineitem", dist, qdist)
+def _knn_out(df: DataFrame) -> DataFrame:
+    return df.select("qid", F.col("rank").cast("long").alias("rank"),
+                     "nid", "dist_sq")
 
 
-# --------------------------------------------------------------------- cells
+def _stepped(legs) -> DataFrame:
+    """Union of (step, frame) legs with a leading BIGINT step column."""
+    out = None
+    for step, df in legs:
+        df = df.select(F.lit(step).cast("long").alias("step"), *df.columns)
+        out = df if out is None else out.unionByName(df)
+    return out
+
+
+# ------------------------------------------------------------------ oracles
+
+def _union(legs) -> str:
+    return "\nUNION ALL\n".join(legs)
+
+
+def live_sql(spec: PointSpec, where: str | None = None, deletes=(),
+             inserts=()) -> str:
+    """(pid, <cols>) of the spec's points matching `where`, minus every
+    pid in the `deletes` batch SQLs, plus the `inserts` batch rows."""
+    cols = ", ".join(("pid", *spec.cols))
+    conds = ([where] if where else []) + [
+        f"pid NOT IN (SELECT pid FROM ({d}))" for d in deletes]
+    base = f"SELECT {cols} FROM ({spec.points_sql()})"
+    if conds:
+        base += " WHERE " + " AND ".join(conds)
+    return _union([base] + [f"SELECT {cols} FROM ({i})" for i in inserts])
+
+
+def _batch_live_sql(spec: PointSpec, inserts: bool, deletes: bool) -> str:
+    return live_sql(spec, deletes=[spec.delete_sql()] if deletes else (),
+                    inserts=[spec.insert_sql()] if inserts else ())
+
+
+def _step_sql(step: int | None) -> str:
+    return "" if step is None else f"CAST({step} AS BIGINT) AS step, "
+
+
+def knn_sql(spec: PointSpec, k: int, qspec: PointSpec | None = None,
+            where: str = QUERY, live: str | None = None,
+            step: int | None = None) -> str:
+    """Brute-force kNN: every query of `qspec` (default: spec) against
+    every live point, ranked by (dist_sq, nid)."""
+    d2 = " + ".join(f"(p.{c} - q.{c}) * (p.{c} - q.{c})" for c in spec.cols)
+    return f"""
+SELECT {_step_sql(step)}qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
+FROM (SELECT qid, nid, dist_sq,
+             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_sq, nid)
+               AS rank
+      FROM (SELECT q.qid, p.pid AS nid, {d2} AS dist_sq
+            FROM ({(qspec or spec).queries_sql(where=where)}) q
+            CROSS JOIN ({live or live_sql(spec)}) p))
+WHERE rank <= {k}"""
+
+
+def _box_pred(d: int) -> str:
+    lo = ["bxlo", "bylo"] + [f"blo{j}" for j in range(2, d)]
+    hi = ["bxhi", "byhi"] + [f"bhi{j}" for j in range(2, d)]
+    return " AND ".join(f"p.{c} BETWEEN b.{l} AND b.{h}"
+                        for c, l, h in zip(points.dim_cols(d), lo, hi))
+
+
+def box_count_sql(spec: PointSpec, boxes, live: str | None = None,
+                  step: int | None = None) -> str:
+    return f"""
+SELECT {_step_sql(step)}b.box_id, count(p.pid) AS cnt
+FROM {fixtures.boxes_values_sql_d(boxes, spec.dims)}
+LEFT JOIN ({live or live_sql(spec)}) p
+  ON {_box_pred(spec.dims)}
+GROUP BY b.box_id"""
+
+
+def box_report_sql(spec: PointSpec, boxes, live: str | None = None) -> str:
+    cols = ", ".join(f"p.{c}" for c in spec.cols)
+    return f"""
+SELECT b.box_id, p.pid, {cols}
+FROM {fixtures.boxes_values_sql_d(boxes, spec.dims)}
+JOIN ({live or live_sql(spec)}) p
+  ON {_box_pred(spec.dims)}"""
+
+
+def circle_count_sql(spec: PointSpec, circles, live: str | None = None
+                     ) -> str:
+    ctr = ["cx", "cy"] + [f"ctr{j}" for j in range(2, spec.dims)]
+    d2 = " + ".join(f"(p.{c} - c.{m}) * (p.{c} - c.{m})"
+                    for c, m in zip(spec.cols, ctr))
+    t = "DOUBLE" if spec.f64 else "BIGINT"
+    return f"""
+SELECT c.circle_id, count(p.pid) AS cnt
+FROM {fixtures.circles_values_sql_d(circles, spec.dims)}
+LEFT JOIN ({live or live_sql(spec)}) p
+  ON {d2} <= CAST(c.r AS {t}) * CAST(c.r AS {t})
+GROUP BY c.circle_id"""
+
+
+# ------------------------------------------------ parameterised index gates
+
+def knn_gate(spec: PointSpec, k: int, qspec: PointSpec | None = None,
+             where: str = QUERY, update: bool = False) -> tuple:
+    """kNN over the spec's index (after its I1+D1 batches if `update`)
+    for the `qspec` sample selected by `where`; returns (query, oracle)."""
+    def run(spark, sf_dir):
+        idx = _updated_index(spark, sf_dir, spec, update, update)
+        q = _frame(spark, sf_dir, (qspec or spec).queries_sql, where)
+        return _knn_out(knn_join(idx, q, k))
+    live = _batch_live_sql(spec, update, update)
+    return run, knn_sql(spec, k, qspec, where, live)
+
+
+_RANGE_ORACLES = {range_count: box_count_sql, range_report: box_report_sql,
+                  circle_count: circle_count_sql}
+
+
+def range_gate(op, spec: PointSpec, shapes, inserts: bool = False,
+               deletes: bool = False) -> tuple:
+    """range_count / range_report / circle_count over the spec's index
+    (after its I1/D1 batches if asked); returns (query, oracle)."""
+    def run(spark, sf_dir):
+        return op(_updated_index(spark, sf_dir, spec, inserts, deletes),
+                  shapes)
+    live = _batch_live_sql(spec, inserts, deletes)
+    return run, _RANGE_ORACLES[op](spec, shapes, live)
+
+
+# -------------------------------------------------------------------- cells
 
 def q_cell_assign(spark, sf_dir) -> DataFrame:
     """B4: vectorized cell-id assignment, aggregated per cell."""
-    g = Grid(GRID_G)
     pts = points.load_points(spark, sf_dir, "uniform")
-    return (pts.selectExpr(f"{g.spark_cell_sql()} AS cell")
+    return (pts.selectExpr(f"{Grid(GRID_G).spark_cell_sql()} AS cell")
             .groupBy("cell").agg(F.count("*").alias("cnt")))
 
 
 def sql_cell_assign() -> str:
-    g = Grid(GRID_G)
-    return (f"SELECT {g.duckdb_cell_sql()} AS cell, count(*) AS cnt "
-            f"FROM ({_pts_sql()}) GROUP BY 1")
+    return (f"SELECT {Grid(GRID_G).duckdb_cell_sql()} AS cell, "
+            f"count(*) AS cnt FROM ({UNIFORM.points_sql()}) GROUP BY 1")
 
 
 def q_index_stats(spark, sf_dir) -> DataFrame:
     """B1-B7 structural check: per-cell live counts out of the built index."""
-    idx = get_index(spark, sf_dir)
+    idx = index_for(spark, sf_dir, UNIFORM)
     return idx.df.groupBy("cell").agg(F.sum("cnt").alias("cnt"))
 
 
-# ------------------------------------------------------------------- ranges
+# ------------------------------------------- time-sliced streams (H7/H8/H9)
 
-def q_range_count(spark, sf_dir) -> DataFrame:
-    return range_count(get_index(spark, sf_dir), BOXES)
-
-
-def sql_range_count() -> str:
-    vals = fixtures.boxes_values_sql(BOXES)
-    return f"""
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN ({_pts_sql()}) p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
+SLIDING = [(t, t) for t in range(1, 10)]  # one slice per step
 
 
-def q_range_count_10k(spark, sf_dir) -> DataFrame:
-    """H4 rangeCountFix at reference scale: 10,000 generated rectangles
-    (testFramework.h:617-648) — measures the range path above its
-    per-job latency floor."""
-    return range_count(get_index(spark, sf_dir), BOXES_10K)
+def _slice_stream(spark, sf_dir, spec: PointSpec, chunks,
+                  window: int | None = None):
+    """Build over slice 0, then for each (lo, hi) chunk insert slices
+    lo..hi and, with a window w, evict slice hi - w; yields (hi, index)
+    after every chunk."""
+    pts = _frame(spark, sf_dir, spec.points_sql)
 
+    def sl(where):
+        return pts.filter(where).select("pid", *spec.cols)
 
-def sql_range_count_10k() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_10K)
-    return f"""
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN ({_pts_sql()}) p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
+    idx = SpatialIndex.build(spark, sl("slice = 0"), grid=spec.grid)
+    for lo, hi in chunks:
+        evict = (sl(f"slice = {hi - window}")
+                 if window and hi >= window else None)
+        idx = idx.update(inserts=sl(f"slice BETWEEN {lo} AND {hi}"),
+                         deletes=evict)
+        yield hi, idx
 
-
-def q_range_report(spark, sf_dir) -> DataFrame:
-    return range_report(get_index(spark, sf_dir), BOXES_SMALL)
-
-
-def sql_range_report() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_SMALL)
-    return f"""
-SELECT b.box_id, p.pid, p.x, p.y
-FROM {vals}
-JOIN ({_pts_sql()}) p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi"""
-
-
-def q_range_report_10k(spark, sf_dir) -> DataFrame:
-    """H5 rangeQueryFix at reference recNum=10000 (testFramework.h:
-    680-713): materializing range REPORT over 10,000 small rects —
-    exercises the report path's output volume above its per-job
-    latency floor (the count-only 10k gate cannot)."""
-    return range_report(get_index(spark, sf_dir), BOXES_10K_REPORT)
-
-
-def sql_range_report_10k() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_10K_REPORT)
-    return f"""
-SELECT b.box_id, p.pid, p.x, p.y
-FROM {vals}
-JOIN ({_pts_sql()}) p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi"""
-
-
-def q_circle_count(spark, sf_dir) -> DataFrame:
-    return circle_count(get_index(spark, sf_dir), CIRCLES)
-
-
-def sql_circle_count() -> str:
-    vals = fixtures.circles_values_sql(CIRCLES)
-    return f"""
-SELECT c.circle_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN ({_pts_sql()}) p
-  ON (p.x - c.cx) * (p.x - c.cx) + (p.y - c.cy) * (p.y - c.cy)
-     <= CAST(c.r AS BIGINT) * CAST(c.r AS BIGINT)
-GROUP BY c.circle_id"""
-
-
-# ---------------------------------------------------------------------- kNN
-
-def _q_knn(spark, sf_dir, k, dist="uniform", qdist=None) -> DataFrame:
-    idx = get_index(spark, sf_dir, dist)
-    q = points.load_query_points(spark, sf_dir, dist, qdist=qdist)
-    return (knn_join(idx, q, k)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def _sql_knn(k, dist="uniform", qdist=None) -> str:
-    return f"""
-WITH pts AS ({_pts_sql(dist)}),
-q AS (SELECT qid, x AS qx, y AS qy FROM ({_q_sql(dist, qdist)})),
-d AS (SELECT q.qid, pts.pid AS nid,
-             (pts.x - q.qx) * (pts.x - q.qx)
-           + (pts.y - q.qy) * (pts.y - q.qy) AS dist_sq
-      FROM q CROSS JOIN pts),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= {k}"""
-
-
-def q_knn_k1(spark, sf_dir):
-    return _q_knn(spark, sf_dir, 1)
-
-
-def q_knn_k10(spark, sf_dir):
-    return _q_knn(spark, sf_dir, 10)
-
-
-def q_knn_k100(spark, sf_dir):
-    return _q_knn(spark, sf_dir, 100)
-
-
-def q_knn_varden(spark, sf_dir):
-    """Skew path: variable-density clusters (hot cells + salting)."""
-    return _q_knn(spark, sf_dir, 10, dist="varden")
-
-
-def q_knn_ood(spark, sf_dir):
-    """H11: build on uniform, query with varden-derived points."""
-    return _q_knn(spark, sf_dir, 10, dist="uniform", qdist="varden")
-
-
-def q_hot_cell_knn(spark, sf_dir) -> DataFrame:
-    """North-rule skew path, oracle-gated: build over the varden
-    clusters with hot_cell_cap=512 so the dense cells salt into >=4
-    blobs and kNN takes the (cell, salt) fan-out branch
-    (queries/skew.py FANOUT_MIN_BLOBS) instead of the cold cell-keyed
-    cogroup — at the default 131,072-row cap no gate-scale cell ever
-    salts, so without this gate the salted query path had pytest
-    coverage only. Queries come from the uniform sample (also keeps
-    the result distinct from knn_varden's). Reference analogue:
-    kdTreeParallel.h's par_do subtree parallelism — one dense subtree
-    never serializes on one worker there either."""
-    key = (id(spark), sf_dir, "varden_hot512")
-    if key not in _INDEX_CACHE:
-        pts = points.load_points(spark, sf_dir, "varden").select(
-            "pid", "x", "y")
-        _INDEX_CACHE[key] = SpatialIndex.build(
-            spark, pts, grid=Grid(GRID_G), hot_cell_cap=512)
-    q = points.load_query_points(spark, sf_dir, "varden", qdist="uniform")
-    return (knn_join(_INDEX_CACHE[key], q, 10)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-# -------------------------------------------------------------- batch updates
-
-def q_insert_then_count(spark, sf_dir) -> DataFrame:
-    """I1 batch insert -> range counts over the fixture boxes."""
-    idx = get_index(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_upd_lineitem")
-    ins = spark.sql(points.insert_batch_sql("_upd_lineitem"))
-    return range_count(idx.update(inserts=ins), BOXES)
-
-
-def sql_insert_then_count() -> str:
-    vals = fixtures.boxes_values_sql(BOXES)
-    return f"""
-WITH allpts AS (
-  SELECT pid, x, y FROM ({_pts_sql()})
-  UNION ALL
-  SELECT pid, x, y FROM ({points.insert_batch_sql('lineitem')})
-)
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN allpts p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
-
-
-def q_delete_then_count(spark, sf_dir) -> DataFrame:
-    """D1/D2 batch delete -> range counts."""
-    idx = get_index(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_upd_lineitem")
-    dele = spark.sql(points.delete_batch_sql("_upd_lineitem", "uniform"))
-    return range_count(idx.update(deletes=dele), BOXES)
-
-
-def sql_delete_then_count() -> str:
-    vals = fixtures.boxes_values_sql(BOXES)
-    return f"""
-WITH live AS (
-  SELECT pid, x, y FROM ({_pts_sql()})
-  WHERE pid NOT IN (SELECT pid FROM ({points.delete_batch_sql('lineitem')}))
-)
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN live p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
-
-
-def q_update_then_knn(spark, sf_dir) -> DataFrame:
-    """I1+D1 combined, then kNN k=10 — the tag=2 workload of
-    script/checkCorrect.sh (insert+delete before querying)."""
-    idx = get_index(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_upd_lineitem")
-    ins = spark.sql(points.insert_batch_sql("_upd_lineitem"))
-    dele = spark.sql(points.delete_batch_sql("_upd_lineitem", "uniform"))
-    idx2 = idx.update(inserts=ins, deletes=dele)
-    q = points.load_query_points(spark, sf_dir, "uniform")
-    return (knn_join(idx2, q, 10)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def sql_update_then_knn() -> str:
-    return f"""
-WITH live AS (
-  SELECT pid, x, y FROM ({_pts_sql()})
-  WHERE pid NOT IN (SELECT pid FROM ({points.delete_batch_sql('lineitem')}))
-  UNION ALL
-  SELECT pid, x, y FROM ({points.insert_batch_sql('lineitem')})
-),
-q AS (SELECT qid, x AS qx, y AS qy FROM ({_q_sql()})),
-d AS (SELECT q.qid, live.pid AS nid,
-             (live.x - q.qx) * (live.x - q.qx)
-           + (live.y - q.qy) * (live.y - q.qy) AS dist_sq
-      FROM q CROSS JOIN live),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= 10"""
-
-
-# --------------------------------------------------- sliding window (H8)
 
 def q_sliding_window_count(spark, sf_dir) -> DataFrame:
     """insertOsmByTime analogue: 10 time slices, window length 5 —
     insert slice t, evict slice t-5; final state = slices 5..9."""
-    pts = points.load_points(spark, sf_dir, "varden")
-    idx = SpatialIndex.build(
-        spark, pts.filter("slice = 0").select("pid", "x", "y"), grid=Grid(GRID_G))
-    for t in range(1, 10):
-        ins = pts.filter(f"slice = {t}").select("pid", "x", "y")
-        dele = (pts.filter(f"slice = {t - 5}").select("pid", "x", "y")
-                if t >= 5 else None)
-        idx = idx.update(inserts=ins, deletes=dele)
+    *_, (_, idx) = _slice_stream(spark, sf_dir, VARDEN, SLIDING, 5)
     return range_count(idx, BOXES)
 
 
@@ -338,322 +339,39 @@ def q_sliding_window_knn(spark, sf_dir) -> DataFrame:
     kNN seed/prune chain over a 9-generation delta-versioned index
     (each step queries blobs layered by broadcast anti-joins +
     checkpointed deltas, not a fresh build)."""
-    pts = points.load_points(spark, sf_dir, "varden")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_swk_lineitem")
-    probe = spark.sql(
-        f"SELECT pid AS qid, x, y FROM "
-        f"(SELECT {points.points_select_sql('varden')} FROM _swk_lineitem "
-        f"WHERE {points.PROBE_FILTER_SQL})")
-    idx = SpatialIndex.build(
-        spark, pts.filter("slice = 0").select("pid", "x", "y"),
-        grid=Grid(GRID_G))
-    outs = []
-    for t in range(1, 10):
-        ins = pts.filter(f"slice = {t}").select("pid", "x", "y")
-        dele = (pts.filter(f"slice = {t - 5}").select("pid", "x", "y")
-                if t >= 5 else None)
-        idx = idx.update(inserts=ins, deletes=dele)
-        outs.append(
-            knn_join(idx, probe, 10)
-            .select(F.lit(t).cast("long").alias("step"), "qid",
-                    F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    probe = _frame(spark, sf_dir, VARDEN.queries_sql, PROBE)
+    return _stepped((t, _knn_out(knn_join(idx, probe, 10)))
+                    for t, idx in _slice_stream(spark, sf_dir, VARDEN,
+                                                SLIDING, 5))
 
 
 def sql_sliding_window_knn() -> str:
-    legs = []
-    for t in range(1, 10):
-        lo = max(0, t - 4)
-        legs.append(f"""
-SELECT CAST({t} AS BIGINT) AS step, qid, CAST(rank AS BIGINT) AS rank,
-       nid, dist_sq
-FROM (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM (SELECT q.qid, p.pid AS nid,
-                   (p.x - q.x) * (p.x - q.x)
-                 + (p.y - q.y) * (p.y - q.y) AS dist_sq
-            FROM (SELECT pid AS qid, x, y FROM ({_pts_sql('varden')})
-                  WHERE (pid % 1009 = 7)) q
-            CROSS JOIN (SELECT pid, x, y FROM ({_pts_sql('varden')})
-                        WHERE slice BETWEEN {lo} AND {t}) p))
-WHERE rank <= 10""")
-    return "\nUNION ALL\n".join(legs)
-
-
-def sql_sliding_window_count() -> str:
-    vals = fixtures.boxes_values_sql(BOXES)
-    return f"""
-WITH live AS (SELECT * FROM ({_pts_sql('varden')}) WHERE slice >= 5)
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN live p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
-
-
-# ------------------------------------------------------------- d=3 (B1/Q1)
-
-def get_index_d3(spark, sf_dir) -> SpatialIndex:
-    key = (id(spark), sf_dir, "d3")
-    if key not in _INDEX_CACHE:
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        li.createOrReplaceTempView("_d3_lineitem")
-        pts3 = spark.sql(
-            f"SELECT {points.PID_SQL} AS pid, {points.UNIFORM_X_SQL} AS x, "
-            f"{points.UNIFORM_Y_SQL} AS y, {points.UNIFORM_Z_SQL} AS z "
-            f"FROM _d3_lineitem")
-        # 3-D cell key (same ~64-cell budget as the 2-D Grid(8)): the
-        # candidate region prunes in three dims, not a z-degenerate two
-        _INDEX_CACHE[key] = SpatialIndex.build(
-            spark, pts3, grid=Grid(GRID_G_3D, dims=3),
-            coord_cols=("x", "y", "z"))
-    return _INDEX_CACHE[key]
-
-
-def _d3_query_points(spark, sf_dir) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_d3q_lineitem")
-    return spark.sql(
-        f"SELECT {points.PID_SQL} AS qid, {points.UNIFORM_X_SQL} AS x, "
-        f"{points.UNIFORM_Y_SQL} AS y, {points.UNIFORM_Z_SQL} AS z "
-        f"FROM _d3q_lineitem WHERE {points.QUERY_FILTER_SQL}")
-
-
-def q_knn_k10_d3(spark, sf_dir) -> DataFrame:
-    """3-D kNN: per-cell trees split on (x,y,z) max-stretch; cell grid
-    keys on (x,y) with xy-only pruning (a valid lower bound) — the
-    reference's d=3 configuration (tests/test.cpp:569-617)."""
-    idx = get_index_d3(spark, sf_dir)
-    q = _d3_query_points(spark, sf_dir)
-    return (knn_join(idx, q, 10)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def q_update_then_knn_d3(spark, sf_dir) -> DataFrame:
-    """Dimension-generic batch update (I1+D1 at d=3; the reference's
-    batch ops are dim-templated, batch_insert.hpp:60-191) -> kNN k=10."""
-    idx = get_index_d3(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_u3_lineitem")
-    ins = spark.sql(points.insert_batch_d3_sql("_u3_lineitem"))
-    dele = spark.sql(points.delete_batch_d3_sql("_u3_lineitem"))
-    idx2 = idx.update(inserts=ins, deletes=dele)
-    q = _d3_query_points(spark, sf_dir)
-    return (knn_join(idx2, q, 10)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def sql_update_then_knn_d3() -> str:
-    sel = (f"{points.PID_SQL} AS pid, {points.UNIFORM_X_SQL} AS x, "
-           f"{points.UNIFORM_Y_SQL} AS y, {points.UNIFORM_Z_SQL} AS z")
-    return f"""
-WITH live AS (
-  SELECT pid, x, y, z FROM (SELECT {sel} FROM lineitem)
-  WHERE pid NOT IN (SELECT pid FROM ({points.delete_batch_d3_sql('lineitem')}))
-  UNION ALL
-  SELECT pid, x, y, z FROM ({points.insert_batch_d3_sql('lineitem')})
-),
-q AS (SELECT pid AS qid, x AS qx, y AS qy, z AS qz
-      FROM (SELECT {sel} FROM lineitem)
-      WHERE (pid % 101 = 7)),
-d AS (SELECT q.qid, live.pid AS nid,
-             (live.x - q.qx) * (live.x - q.qx)
-           + (live.y - q.qy) * (live.y - q.qy)
-           + (live.z - q.qz) * (live.z - q.qz) AS dist_sq
-      FROM q CROSS JOIN live),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= 10"""
-
-
-def sql_knn_k10_d3() -> str:
-    sel = (f"{points.PID_SQL} AS pid, {points.UNIFORM_X_SQL} AS x, "
-           f"{points.UNIFORM_Y_SQL} AS y, {points.UNIFORM_Z_SQL} AS z")
-    return f"""
-WITH pts AS (SELECT {sel} FROM lineitem),
-q AS (SELECT pid AS qid, x AS qx, y AS qy, z AS qz FROM pts
-      WHERE (qid % 101 = 7)),
-d AS (SELECT q.qid, pts.pid AS nid,
-             (pts.x - q.qx) * (pts.x - q.qx)
-           + (pts.y - q.qy) * (pts.y - q.qy)
-           + (pts.z - q.qz) * (pts.z - q.qz) AS dist_sq
-      FROM q CROSS JOIN pts),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= 10"""
-
-
-# ----------------------------------------- kNN graph + incremental (H7/H10)
-
-KNN_GRAPH_FILTER = f"({points.PID_SQL} % 211 = 3)"  # ~0.5% of nodes
-
-
-def q_knn_graph(spark, sf_dir) -> DataFrame:
-    """H10 generate_knn: k=5 adjacency for a deterministic node sample
-    (full self-kNN graph at sf0.01 would need a 3.6e9-pair oracle; the
-    sampled graph exercises the identical engine path)."""
-    idx = get_index(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_kg_lineitem")
-    q = spark.sql(
-        f"SELECT pid AS qid, x, y FROM "
-        f"(SELECT {points.points_select_sql('uniform')} FROM _kg_lineitem "
-        f"WHERE {KNN_GRAPH_FILTER})")
-    return (knn_join(idx, q, 5)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def sql_knn_graph() -> str:
-    return f"""
-WITH pts AS ({_pts_sql()}),
-q AS (SELECT pid AS qid, x AS qx, y AS qy FROM pts
-      WHERE (qid % 211 = 3)),
-d AS (SELECT q.qid, pts.pid AS nid,
-             (pts.x - q.qx) * (pts.x - q.qx)
-           + (pts.y - q.qy) * (pts.y - q.qy) AS dist_sq
-      FROM q CROSS JOIN pts),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= 5"""
+    # window state after step t: slices max(0, t-4)..t
+    return _union(
+        knn_sql(VARDEN, 10, where=PROBE, step=t, live=live_sql(
+            VARDEN, f"slice BETWEEN {max(0, t - 4)} AND {t}"))
+        for t in range(1, 10))
 
 
 def q_incremental_build(spark, sf_dir) -> DataFrame:
     """H7 incrementalBuild: build from slice 0, insert slices 1..9 in
     chunks, then range count — same truth as a bulk build."""
-    pts = points.load_points(spark, sf_dir, "uniform")
-    idx = SpatialIndex.build(
-        spark, pts.filter("slice = 0").select("pid", "x", "y"),
-        grid=Grid(GRID_G))
-    for t in range(1, 10):
-        idx = idx.update(
-            inserts=pts.filter(f"slice = {t}").select("pid", "x", "y"))
+    *_, (_, idx) = _slice_stream(spark, sf_dir, UNIFORM, SLIDING)
     return range_count(idx, BOXES_SMALL)
-
-
-def sql_incremental_build() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_SMALL)
-    return f"""
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN ({_pts_sql()}) p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
 
 
 def q_incremental_delete(spark, sf_dir) -> DataFrame:
     """H7 incrementalDelete: bulk build, then delete slices 0..4 in
     chunks; final live set = slices 5..9."""
     pts = points.load_points(spark, sf_dir, "uniform")
-    idx = get_index(spark, sf_dir)
+    idx = index_for(spark, sf_dir, UNIFORM)
     for t in range(5):
         idx = idx.update(
             deletes=pts.filter(f"slice = {t}").select("pid", "x", "y"))
     return range_count(idx, BOXES_SMALL)
 
 
-def sql_incremental_delete() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_SMALL)
-    return f"""
-WITH live AS (SELECT * FROM ({_pts_sql()}) WHERE slice >= 5)
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN live p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
-
-
-# ----------------------------------------- H2 ratio sweep / H9 interleaved
-
-def q_insert_ratio_sweep(spark, sf_dir) -> DataFrame:
-    """H2: cumulative insert legs at ratios ~{1e-4,1e-3,1e-2,0.1}
-    (tests/test.cpp:55-72); after each leg, range counts over the
-    fixture boxes tagged with the leg number."""
-    idx = get_index(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_sw_lineitem")
-    outs = []
-    for step in range(1, len(points.SWEEP_LEGS) + 1):
-        ins = spark.sql(points.sweep_insert_sql("_sw_lineitem", step))
-        idx = idx.update(inserts=ins)
-        outs.append(range_count(idx, BOXES_SMALL)
-                    .withColumn("step", F.lit(step).cast("long")))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def sql_insert_ratio_sweep() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_SMALL)
-    legs = []
-    for step in range(1, len(points.SWEEP_LEGS) + 1):
-        ins_union = "\n  UNION ALL\n  ".join(
-            f"SELECT pid, x, y FROM ({points.sweep_insert_sql('lineitem', s)})"
-            for s in range(1, step + 1))
-        legs.append(f"""
-SELECT CAST({step} AS BIGINT) AS step, b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN (
-  SELECT pid, x, y FROM ({_pts_sql()})
-  UNION ALL
-  {ins_union}
-) p ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id""")
-
-    return "\nUNION ALL\n".join(legs)
-
-
-def q_delete_ratio_sweep(spark, sf_dir) -> DataFrame:
-    """H2: cumulative delete legs at the same ratios (overlapping moduli;
-    repeated deletes of an id are ignored — partial-cover semantics,
-    batch_delete.hpp:95-107)."""
-    idx = get_index(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_sw_lineitem")
-    outs = []
-    for step in range(1, len(points.SWEEP_LEGS) + 1):
-        dele = spark.sql(points.sweep_delete_sql("_sw_lineitem", step))
-        idx = idx.update(deletes=dele)
-        outs.append(range_count(idx, BOXES_SMALL)
-                    .withColumn("step", F.lit(step).cast("long")))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def sql_delete_ratio_sweep() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_SMALL)
-    legs = []
-    for step in range(1, len(points.SWEEP_LEGS) + 1):
-        # pid IS the shared PID_SQL value, so moduli apply to it directly
-        conds = " OR ".join(f"(pid % {m} = {r})"
-                            for m, r in points.SWEEP_LEGS[:step])
-        legs.append(f"""
-SELECT CAST({step} AS BIGINT) AS step, b.box_id, count(q.pid) AS cnt
-FROM {vals}
-LEFT JOIN (SELECT pid, x, y FROM ({_pts_sql()}) WHERE NOT ({conds})) q
-  ON q.x BETWEEN b.bxlo AND b.bxhi AND q.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id""")
-    return "\nUNION ALL\n".join(legs)
+INCR_CHUNKS = [(1, 3), (4, 6), (7, 9)]
 
 
 def q_incr_build_and_query(spark, sf_dir) -> DataFrame:
@@ -663,379 +381,67 @@ def q_incr_build_and_query(spark, sf_dir) -> DataFrame:
     probing k=1 kNN on a fixed query set after each chunk (states after
     slices 3, 6, 9 — the same truth as single-slice stepping, at half
     the per-job latency floors)."""
-    pts = points.load_points(spark, sf_dir, "uniform")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_h9_lineitem")
-    probe = spark.sql(
-        f"SELECT pid AS qid, x, y FROM "
-        f"(SELECT {points.points_select_sql('uniform')} FROM _h9_lineitem "
-        f"WHERE {points.PROBE_FILTER_SQL})")
-    idx = SpatialIndex.build(
-        spark, pts.filter("slice = 0").select("pid", "x", "y"),
-        grid=Grid(GRID_G))
-    outs = []
-    for t in (3, 6, 9):
-        idx = idx.update(
-            inserts=pts.filter(f"slice BETWEEN {t - 2} AND {t}")
-            .select("pid", "x", "y"))
-        outs.append(
-            knn_join(idx, probe, 1)
-            .select(F.lit(t).cast("long").alias("step"), "qid",
-                    F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    probe = _frame(spark, sf_dir, UNIFORM.queries_sql, PROBE)
+    return _stepped((t, _knn_out(knn_join(idx, probe, 1)))
+                    for t, idx in _slice_stream(spark, sf_dir, UNIFORM,
+                                                INCR_CHUNKS))
 
 
 def sql_incr_build_and_query() -> str:
+    return _union(knn_sql(UNIFORM, 1, where=PROBE, step=t,
+                          live=live_sql(UNIFORM, f"slice <= {t}"))
+                  for _, t in INCR_CHUNKS)
+
+
+# ------------------------------------------------ H2 ratio sweeps
+
+def sweep_gate(deletes: bool) -> tuple:
+    """H2: cumulative insert or delete legs at ratios ~{1e-4,1e-3,1e-2,
+    0.1} (tests/test.cpp:55-72); after each leg, range counts over the
+    fixture boxes tagged with the leg number. Delete legs overlap
+    (nested moduli); repeated deletes of an id are ignored —
+    partial-cover semantics, batch_delete.hpp:95-107."""
+    batch_sql = points.sweep_delete_sql if deletes else points.sweep_insert_sql
+    steps = range(1, len(points.SWEEP_LEGS) + 1)
+
+    def run(spark, sf_dir):
+        idx = index_for(spark, sf_dir, UNIFORM)
+        legs = []
+        for step in steps:
+            batch = _frame(spark, sf_dir, batch_sql, step)
+            idx = (idx.update(deletes=batch) if deletes
+                   else idx.update(inserts=batch))
+            legs.append((step, range_count(idx, BOXES_SMALL)))
+        return _stepped(legs)
+
     legs = []
-    for t in (3, 6, 9):
-        legs.append(f"""
-SELECT CAST({t} AS BIGINT) AS step, qid, CAST(rank AS BIGINT) AS rank,
-       nid, dist_sq
-FROM (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM (SELECT q.qid, p.pid AS nid,
-                   (p.x - q.x) * (p.x - q.x)
-                 + (p.y - q.y) * (p.y - q.y) AS dist_sq
-            FROM (SELECT pid AS qid, x, y FROM ({_pts_sql()})
-                  WHERE (pid % 1009 = 7)) q
-            CROSS JOIN (SELECT pid, x, y FROM ({_pts_sql()})
-                        WHERE slice <= {t}) p))
-WHERE rank <= 1""")
-    return "\nUNION ALL\n".join(legs)
+    for step in steps:
+        batches = [batch_sql("lineitem", s) for s in range(1, step + 1)]
+        live = (live_sql(UNIFORM, deletes=batches) if deletes
+                else live_sql(UNIFORM, inserts=batches))
+        legs.append(box_count_sql(UNIFORM, BOXES_SMALL, live, step))
+    return run, _union(legs)
 
 
-# ------------------------------------------------------------- d=5 (B1/Q1)
+# ----------------------------------------------------- snapshot round-trip
 
-def get_index_d5(spark, sf_dir) -> SpatialIndex:
-    key = (id(spark), sf_dir, "d5")
-    if key not in _INDEX_CACHE:
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        li.createOrReplaceTempView("_d5_lineitem")
-        pts5 = spark.sql(
-            f"SELECT {points.d5_select_sql()} FROM _d5_lineitem")
-        # 4-D cell key, 3^4 = 81 cells (~the 64-cell budget): measured
-        # sweep at sf0.1 — (4,3)=4.34, (3,4)=3.74, (2,5)=2.85 candidate
-        # cells/query; (3,4) meets the <4 target with 81-cell
-        # parallelism and the fastest kNN wall of the >=64-cell options
-        _INDEX_CACHE[key] = SpatialIndex.build(
-            spark, pts5, grid=Grid(3, dims=4),
-            coord_cols=points.D5_COLS)
-    return _INDEX_CACHE[key]
-
-
-def _q_knn_d5(spark, sf_dir, k) -> DataFrame:
-    idx = get_index_d5(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_d5q_lineitem")
-    q = spark.sql(
-        f"SELECT {points.d5_select_sql('qid')} FROM _d5q_lineitem "
-        f"WHERE {points.QUERY_FILTER_SQL}")
-    return (knn_join(idx, q, k)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def q_knn_k10_d5(spark, sf_dir) -> DataFrame:
-    """d=5 configuration (tests/test.cpp:584): per-cell trees split all
-    5 dims; xy-only cell pruning degrades with d (measured in bench via
-    knn_candidates cells-per-query) but stays exact."""
-    return _q_knn_d5(spark, sf_dir, 10)
-
-
-def q_knn_k100_d5(spark, sf_dir) -> DataFrame:
-    """k=100 at d=5 — the reference sweep varies k and d independently
-    (script/checkCorrect.sh, tests/test.cpp:84-96); exercises the
-    large-k super-stats fallback against the high-d candidate path."""
-    return _q_knn_d5(spark, sf_dir, 100)
-
-
-def _sql_knn_d5(k: int) -> str:
-    return f"""
-WITH pts AS (SELECT {points.d5_select_sql()} FROM lineitem),
-q AS (SELECT pid AS qid, x AS qx, y AS qy, z AS qz, w AS qw, v AS qv
-      FROM pts WHERE (qid % 101 = 7)),
-d AS (SELECT q.qid, pts.pid AS nid,
-             (pts.x - q.qx) * (pts.x - q.qx)
-           + (pts.y - q.qy) * (pts.y - q.qy)
-           + (pts.z - q.qz) * (pts.z - q.qz)
-           + (pts.w - q.qw) * (pts.w - q.qw)
-           + (pts.v - q.qv) * (pts.v - q.qv) AS dist_sq
-      FROM q CROSS JOIN pts),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= {k}"""
-
-
-def sql_knn_k10_d5() -> str:
-    return _sql_knn_d5(10)
-
-
-def q_update_then_knn_d5(spark, sf_dir) -> DataFrame:
-    """Batch insert+delete then kNN at d=5 — the reference's
-    checkCorrect.sh tag=2 configuration (insert AND delete before
-    querying, at d=5 exactly as script/checkCorrect.sh:3-47 runs it;
-    batch ops dim-templated, batch_insert.hpp:60-191)."""
-    idx = get_index_d5(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_u5_lineitem")
-    ins = spark.sql(points.insert_batch_d5_sql("_u5_lineitem"))
-    dele = spark.sql(points.delete_batch_d5_sql("_u5_lineitem"))
-    idx2 = idx.update(inserts=ins, deletes=dele)
-    q = spark.sql(
-        f"SELECT {points.d5_select_sql('qid')} FROM _u5_lineitem "
-        f"WHERE {points.QUERY_FILTER_SQL}")
-    return (knn_join(idx2, q, 10)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def sql_update_then_knn_d5() -> str:
-    cc = list(points.D5_COLS)
-    cols = ", ".join(cc)
-    dist = " + ".join(
-        f"(live.{c} - q.q{c}) * (live.{c} - q.q{c})" for c in cc)
-    return f"""
-WITH live AS (
-  SELECT pid, {cols} FROM (SELECT {points.d5_select_sql()} FROM lineitem)
-  WHERE pid NOT IN (SELECT pid FROM ({points.delete_batch_d5_sql('lineitem')}))
-  UNION ALL
-  SELECT pid, {cols} FROM ({points.insert_batch_d5_sql('lineitem')})
-),
-q AS (SELECT pid AS qid, {', '.join(f'{c} AS q{c}' for c in cc)}
-      FROM (SELECT {points.d5_select_sql()} FROM lineitem)
-      WHERE (pid % 101 = 7)),
-d AS (SELECT q.qid, live.pid AS nid, {dist} AS dist_sq
-      FROM q CROSS JOIN live),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= 10"""
-
-
-BOXES_D5 = fixtures.gen_boxes_d(24, 5)
-
-
-def q_range_count_d5(spark, sf_dir) -> DataFrame:
-    """Range count at d=5 — reference parity: script/checkCorrect.sh
-    runs queryType 1 (range count) at d=5 over the dim-templated
-    range_count.hpp; cell enumeration keys on (x, y), classification
-    and the kernel scan use all 5 dims."""
-    return range_count(get_index_d5(spark, sf_dir), BOXES_D5)
-
-
-def _d5_box_pred(p: str = "p", b: str = "b") -> str:
-    lo = ["bxlo", "bylo", "blo2", "blo3", "blo4"]
-    hi = ["bxhi", "byhi", "bhi2", "bhi3", "bhi4"]
-    return " AND ".join(
-        f"{p}.{c} BETWEEN {b}.{l} AND {b}.{h}"
-        for c, l, h in zip(points.D5_COLS, lo, hi))
-
-
-def sql_range_count_d5() -> str:
-    vals = fixtures.boxes_values_sql_d(BOXES_D5, 5)
-    return f"""
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN (SELECT {points.d5_select_sql()} FROM lineitem) p
-  ON {_d5_box_pred()}
-GROUP BY b.box_id"""
-
-
-def q_range_report_d5(spark, sf_dir) -> DataFrame:
-    """Range report at d=5 (queryType 2 of checkCorrect.sh): emits all
-    five coordinate columns per matched point."""
-    return range_report(get_index_d5(spark, sf_dir), BOXES_D5)
-
-
-def sql_range_report_d5() -> str:
-    vals = fixtures.boxes_values_sql_d(BOXES_D5, 5)
-    cols = ", ".join(f"p.{c}" for c in points.D5_COLS)
-    return f"""
-SELECT b.box_id, p.pid, {cols}
-FROM {vals}
-JOIN (SELECT {points.d5_select_sql()} FROM lineitem) p
-  ON {_d5_box_pred()}"""
-
-
-CIRCLES_D5 = fixtures.gen_circles_d(15, 5)
-
-
-def q_circle_count_d5(spark, sf_dir) -> DataFrame:
-    """Ball count at d=5 (range_count.hpp:99-131 is dim-templated; the
-    checkCorrect.sh sweep varies queryType and d independently): cell
-    enumeration keys on the grid's 4 dims via the ball's bounding box,
-    classification + the kernel scan use the exact 5-d min/max dist²."""
-    return circle_count(get_index_d5(spark, sf_dir), CIRCLES_D5)
-
-
-def sql_circle_count_d5() -> str:
-    vals = fixtures.circles_values_sql_d(CIRCLES_D5, 5)
-    ctr = ["cx", "cy", "ctr2", "ctr3", "ctr4"]
-    dist = " + ".join(
-        f"(p.{pc} - c.{cc}) * (p.{pc} - c.{cc})"
-        for pc, cc in zip(points.D5_COLS, ctr))
-    return f"""
-SELECT c.circle_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN (SELECT {points.d5_select_sql()} FROM lineitem) p
-  ON {dist} <= CAST(c.r AS BIGINT) * CAST(c.r AS BIGINT)
-GROUP BY c.circle_id"""
-
-
-# -------------------------------------------------------- float coords (f64)
-
-def get_index_f64(spark, sf_dir) -> SpatialIndex:
-    key = (id(spark), sf_dir, "f64")
-    if key not in _INDEX_CACHE:
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        li.createOrReplaceTempView("_f64_lineitem")
-        pts = spark.sql(
-            f"SELECT {points.f64_select_sql()} FROM _f64_lineitem")
-        _INDEX_CACHE[key] = SpatialIndex.build(spark, pts, grid=Grid(GRID_G))
-    return _INDEX_CACHE[key]
-
-
-def q_knn_k10_f64(spark, sf_dir) -> DataFrame:
-    """Float-coordinate mode: double coords end to end (the reference's
-    double test build, comparator.h:10-79; tests/testFramework.h:19-20)
-    — blobs, stats, probes and distances all run in IEEE float64, and
-    dist_sq stays DOUBLE. Tie-break rule divergence vs the reference:
-    the reference's Num_Comparator treats |a-b| < eps as equal and
-    breaks remaining ties by point order; here (and in the DuckDB
-    oracle) floats compare exactly and ties break on (dist_sq, nid) —
-    points whose distances differ by < eps can therefore rank in the
-    opposite order from the reference, though identically to any
-    engine doing exact IEEE comparison."""
-    idx = get_index_f64(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_f64q_lineitem")
-    q = spark.sql(
-        f"SELECT {points.f64_select_sql('qid')} FROM _f64q_lineitem "
-        f"WHERE {points.QUERY_FILTER_SQL}")
-    return (knn_join(idx, q, 10)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def sql_knn_k10_f64() -> str:
-    return f"""
-WITH pts AS (SELECT {points.f64_select_sql()} FROM lineitem),
-q AS (SELECT pid AS qid, x AS qx, y AS qy FROM pts
-      WHERE (qid % 101 = 7)),
-d AS (SELECT q.qid, pts.pid AS nid,
-             (pts.x - q.qx) * (pts.x - q.qx)
-           + (pts.y - q.qy) * (pts.y - q.qy) AS dist_sq
-      FROM q CROSS JOIN pts),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= 10"""
-
-
-def q_range_count_f64(spark, sf_dir) -> DataFrame:
-    """Range count over the float-mode index: integer box bounds,
-    double coordinates (inclusive compares on int-valued bounds are the
-    identical predicate in numpy, Spark and DuckDB)."""
-    return range_count(get_index_f64(spark, sf_dir), BOXES)
-
-
-def sql_range_count_f64() -> str:
-    vals = fixtures.boxes_values_sql(BOXES)
-    return f"""
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN (SELECT {points.f64_select_sql()} FROM lineitem) p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
-
-
-def q_range_report_f64(spark, sf_dir) -> DataFrame:
-    """Range report over the float-mode index: coordinates come back
-    DOUBLE, hash-compared bit-for-bit against DuckDB's doubles."""
-    return range_report(get_index_f64(spark, sf_dir), BOXES_SMALL)
-
-
-def sql_range_report_f64() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_SMALL)
-    return f"""
-SELECT b.box_id, p.pid, p.x, p.y
-FROM {vals}
-JOIN (SELECT {points.f64_select_sql()} FROM lineitem) p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi"""
-
-
-def q_circle_count_f64(spark, sf_dir) -> DataFrame:
-    """Circle count over the float-mode index: integer centers/radii,
-    double coordinates. dist² is a sum of two (sub, mul) chains on
-    bit-identical doubles — IEEE-identical across numpy/Spark/DuckDB
-    because each operand arrives exactly and every op is correctly
-    rounded in the same order."""
-    return circle_count(get_index_f64(spark, sf_dir), CIRCLES)
-
-
-def sql_circle_count_f64() -> str:
-    vals = fixtures.circles_values_sql(CIRCLES)
-    return f"""
-SELECT c.circle_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN (SELECT {points.f64_select_sql()} FROM lineitem) p
-  ON (p.x - c.cx) * (p.x - c.cx) + (p.y - c.cy) * (p.y - c.cy)
-     <= CAST(c.r AS DOUBLE) * CAST(c.r AS DOUBLE)
-GROUP BY c.circle_id"""
-
-
-def q_update_then_knn_f64(spark, sf_dir) -> DataFrame:
-    """I1+D1 then kNN k=10, float mode — the tag=2 checkCorrect.sh
-    workload over double coordinates (the reference's double test
-    build runs the same insert/delete/query chain)."""
-    idx = get_index_f64(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_updf_lineitem")
-    ins = spark.sql(points.insert_batch_f64_sql("_updf_lineitem"))
-    dele = spark.sql(points.delete_batch_f64_sql("_updf_lineitem"))
-    idx2 = idx.update(inserts=ins, deletes=dele)
-    q = spark.sql(
-        f"SELECT {points.f64_select_sql('qid')} FROM _updf_lineitem "
-        f"WHERE {points.QUERY_FILTER_SQL}")
-    return (knn_join(idx2, q, 10)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def sql_update_then_knn_f64() -> str:
-    return f"""
-WITH live AS (
-  SELECT * FROM (SELECT {points.f64_select_sql()} FROM lineitem)
-  WHERE pid NOT IN
-    (SELECT pid FROM ({points.delete_batch_f64_sql('lineitem')}))
-  UNION ALL
-  SELECT pid, x, y FROM ({points.insert_batch_f64_sql('lineitem')})
-),
-q AS (SELECT pid AS qid, x AS qx, y AS qy
-      FROM (SELECT {points.f64_select_sql()} FROM lineitem)
-      WHERE (pid % 101 = 7)),
-d AS (SELECT q.qid, live.pid AS nid,
-             (live.x - q.qx) * (live.x - q.qx)
-           + (live.y - q.qy) * (live.y - q.qy) AS dist_sq
-      FROM q CROSS JOIN live),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= 10"""
+def q_snapshot_roundtrip(spark, sf_dir) -> DataFrame:
+    """Iceberg-semantics persistence gate (catalog.SnapshotStore): full
+    commit -> batch insert -> INCREMENTAL commit (only touched buckets
+    rewritten) -> load(CURRENT) -> range counts. The counts come from
+    the re-read snapshot files, so the gate proves the checkpoint
+    round-trip end to end, not just in-memory state."""
+    import tempfile
+    from ..catalog import SnapshotStore
+    # fresh index (not the shared cache): updates must not leak into
+    # other gates' cached index
+    idx = build_index(spark, sf_dir, UNIFORM)
+    store = SnapshotStore(tempfile.mkdtemp(prefix="snapstore-"))
+    base = store.commit(idx)
+    idx2 = idx.update(inserts=_frame(spark, sf_dir, UNIFORM.insert_sql))
+    store.commit(idx2, parent=base)
+    loaded = store.load(spark)  # CURRENT
+    return range_count(loaded, BOXES_SMALL)
 
 
 # ------------------------------------------------------- polygon / raster
@@ -1045,20 +451,8 @@ def q_point_in_polygon(spark, sf_dir) -> DataFrame:
     return point_in_polygon(pts, POLYGONS, grid=Grid(GRID_G))
 
 
-def sql_point_in_polygon() -> str:
-    return polygon_join_sql(f"SELECT pid, x, y FROM ({_pts_sql()})", POLYGONS)
-
-
 def q_tile_cells(spark, sf_dir) -> DataFrame:
     return tile_cell_assign(spark, Grid(GRID_G), TILES)
-
-
-def sql_tile_cells() -> str:
-    return tile_cell_assign_sql(Grid(GRID_G), fixtures.tiles_values_sql(TILES))
-
-
-POLY_A = fixtures.gen_convex_polygons(40, seed=61)
-POLY_B = fixtures.gen_convex_polygons(60, seed=62)
 
 
 def q_polygon_overlay(spark, sf_dir) -> DataFrame:
@@ -1072,11 +466,7 @@ def q_polygon_overlay(spark, sf_dir) -> DataFrame:
                         grid=Grid(GRID_G))
 
 
-def sql_polygon_overlay() -> str:
-    return polygon_join_oracle_sql(
-        fixtures.polygon_verts_values_sql(POLY_A, "vva"),
-        fixtures.polygon_verts_values_sql(POLY_B, "vvb"))
-
+# ------------------------------------------------------------------ DBSCAN
 
 DBSCAN_FILTER = "pid % 23 = 5"   # ~4% subset: keeps the oracle's
 # cross-join quadratic term at DuckDB-friendly size
@@ -1099,7 +489,7 @@ def sql_dbscan() -> str:
     e2 = DBSCAN_EPS * DBSCAN_EPS
     return f"""
 WITH RECURSIVE
-p AS (SELECT pid, x, y FROM ({_pts_sql('varden')}) WHERE {DBSCAN_FILTER}),
+p AS (SELECT pid, x, y FROM ({VARDEN.points_sql()}) WHERE {DBSCAN_FILTER}),
 e AS (SELECT a.pid AS pa, b.pid AS pb FROM p a JOIN p b
       ON (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= {e2}),
 cnt AS (SELECT pa, count(*) AS n FROM e GROUP BY pa),
@@ -1133,20 +523,36 @@ LEFT JOIN border ON border.pid = p.pid"""
 DIST_JOIN_R = 7_000  # ~9 partners/query at sf0.01 density
 
 
+def _query_and_points(spark, sf_dir) -> tuple:
+    q = points.load_query_points(spark, sf_dir, "uniform")
+    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
+    return q, pts
+
+
 def q_distance_join(spark, sf_dir) -> DataFrame:
     """Bichromatic radius join (queries/joins.py): the ~1% query sample
     against the full uniform point set, all pairs within DIST_JOIN_R.
     Fully JVM-side (cell-expand + equi-join + codegen filter) — the
     one spatial primitive whose 100 TB plan needs no index blobs and
     no Python at all."""
-    q = points.load_query_points(spark, sf_dir, "uniform") \
-        .select(F.col("qid"), "x", "y")
-    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
+    q, pts = _query_and_points(spark, sf_dir)
     # grid=None -> r-sized cells (the candidate-blocking unit); the
     # result set is grid-independent, only the false-candidate volume
     # through the filter changes
     return distance_join(q, pts, DIST_JOIN_R,
                          left_id="qid", right_id="pid")
+
+
+def sql_distance_join() -> str:
+    r = DIST_JOIN_R
+    return f"""
+WITH pts AS ({UNIFORM.points_sql()}),
+q AS (SELECT qid, x AS qx, y AS qy FROM ({UNIFORM.queries_sql()}))
+SELECT q.qid, p.pid,
+       (p.x - q.qx) * (p.x - q.qx) + (p.y - q.qy) * (p.y - q.qy) AS dist_sq
+FROM q JOIN pts p
+  ON (p.x - q.qx) * (p.x - q.qx) + (p.y - q.qy) * (p.y - q.qy)
+     <= {r} * {r}"""
 
 
 def q_rect_join(spark, sf_dir) -> DataFrame:
@@ -1155,11 +561,10 @@ def q_rect_join(spark, sf_dir) -> DataFrame:
     rects over the full set — tile<->region matching, PBSM-style
     reference-point dedup, fully JVM-side. Extents are pure SQL
     arithmetic shared verbatim with the DuckDB oracle."""
-    q = points.load_query_points(spark, sf_dir, "uniform")
+    q, pts = _query_and_points(spark, sf_dir)
     lt = q.selectExpr("qid", "x AS x0", "y AS y0",
                       "x + 10000 + (qid % 7) * 5000 AS x1",
                       "y + 10000 + (qid % 5) * 6000 AS y1")
-    pts = points.load_points(spark, sf_dir, "uniform")
     rt = pts.selectExpr("pid", "x AS x0", "y AS y0",
                         "x + pid % 2000 AS x1", "y + pid % 1900 AS y1")
     # Grid(64): cw ~ 15.6k vs ~25k left extents -> a few cells per left
@@ -1174,9 +579,10 @@ def sql_rect_join() -> str:
 WITH lt AS (SELECT qid, qx AS lx0, qy AS ly0,
                    qx + 10000 + (qid % 7) * 5000 AS lx1,
                    qy + 10000 + (qid % 5) * 6000 AS ly1
-            FROM (SELECT qid, x AS qx, y AS qy FROM ({_q_sql()}))),
+            FROM (SELECT qid, x AS qx, y AS qy
+                  FROM ({UNIFORM.queries_sql()}))),
 rt AS (SELECT pid, x AS rx0, y AS ry0, x + pid % 2000 AS rx1,
-              y + pid % 1900 AS ry1 FROM ({_pts_sql()}))
+              y + pid % 1900 AS ry1 FROM ({UNIFORM.points_sql()}))
 SELECT lt.qid, rt.pid
 FROM lt JOIN rt
   ON lx0 <= rx1 AND rx0 <= lx1 AND ly0 <= ry1 AND ry0 <= ly1"""
@@ -1189,17 +595,14 @@ def q_kernel_density(spark, sf_dir) -> DataFrame:
     """Epanechnikov KDE (queries/joins.py kernel_density): pure-int64
     finite-support density estimate, query sample vs full point set."""
     from ..queries.joins import kernel_density
-    q = points.load_query_points(spark, sf_dir, "uniform") \
-        .select("qid", "x", "y")
-    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
-    return kernel_density(q, pts, KDE_R)
+    return kernel_density(*_query_and_points(spark, sf_dir), KDE_R)
 
 
 def sql_kernel_density() -> str:
     r2 = KDE_R * KDE_R
     return f"""
-WITH q AS (SELECT qid, x AS qx, y AS qy FROM ({_q_sql()})),
-p AS ({_pts_sql()})
+WITH q AS (SELECT qid, x AS qx, y AS qy FROM ({UNIFORM.queries_sql()})),
+p AS ({UNIFORM.points_sql()})
 SELECT q.qid,
        CAST(COALESCE(SUM({r2}::BIGINT
             - ((p.x - q.qx) * (p.x - q.qx)
@@ -1212,19 +615,17 @@ GROUP BY q.qid"""
 
 def q_closest_pair(spark, sf_dir) -> DataFrame:
     """Bichromatic closest pair (queries/joins.py closest_pair):
-    query sample vs full point set, radius-doubling over the cell
-    join, deterministic (dist, qid, pid) tie-break."""
+    query sample vs full point set, radius-quadrupling rounds over the
+    cell join, deterministic (dist, qid, pid) tie-break."""
     from ..queries.joins import closest_pair
-    q = points.load_query_points(spark, sf_dir, "uniform") \
-        .select("qid", "x", "y")
-    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
+    q, pts = _query_and_points(spark, sf_dir)
     return closest_pair(q, pts, left_id="qid", right_id="pid")
 
 
 def sql_closest_pair() -> str:
     return f"""
-WITH q AS (SELECT qid, x AS qx, y AS qy FROM ({_q_sql()})),
-p AS ({_pts_sql()}),
+WITH q AS (SELECT qid, x AS qx, y AS qy FROM ({UNIFORM.queries_sql()})),
+p AS ({UNIFORM.points_sql()}),
 d AS (SELECT q.qid, p.pid,
              (p.x - q.qx) * (p.x - q.qx)
            + (p.y - q.qy) * (p.y - q.qy) AS dist_sq
@@ -1233,206 +634,134 @@ SELECT qid, pid, dist_sq FROM d
 ORDER BY dist_sq, qid, pid LIMIT 1"""
 
 
-def sql_distance_join() -> str:
-    r = DIST_JOIN_R
-    return f"""
-WITH pts AS ({_pts_sql()}),
-q AS (SELECT qid, x AS qx, y AS qy FROM ({_q_sql()}))
-SELECT q.qid, p.pid,
-       (p.x - q.qx) * (p.x - q.qx) + (p.y - q.qy) * (p.y - q.qy) AS dist_sq
-FROM q JOIN pts p
-  ON (p.x - q.qx) * (p.x - q.qx) + (p.y - q.qy) * (p.y - q.qy)
-     <= {r} * {r}"""
-
-
-# ----------------------------------------------------- snapshot round-trip
-
-def q_snapshot_roundtrip(spark, sf_dir) -> DataFrame:
-    """Iceberg-semantics persistence gate (catalog.SnapshotStore): full
-    commit -> batch insert -> INCREMENTAL commit (only touched buckets
-    rewritten) -> load(CURRENT) -> range counts. The counts come from
-    the re-read snapshot files, so the gate proves the checkpoint
-    round-trip end to end, not just in-memory state."""
-    import tempfile
-    from ..catalog import SnapshotStore
-    # fresh index (not the shared cache): updates must not leak into
-    # other gates' cached index
-    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
-    idx = SpatialIndex.build(spark, pts, grid=Grid(GRID_G))
-    store = SnapshotStore(tempfile.mkdtemp(prefix="snapstore-"))
-    base = store.commit(idx)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_snap_lineitem")
-    ins = spark.sql(points.insert_batch_sql("_snap_lineitem"))
-    idx2 = idx.update(inserts=ins)
-    store.commit(idx2, parent=base)
-    loaded = store.load(spark)  # CURRENT
-    return range_count(loaded, BOXES_SMALL)
-
-
-def sql_snapshot_roundtrip() -> str:
-    vals = fixtures.boxes_values_sql(BOXES_SMALL)
-    return f"""
-WITH allpts AS (
-  SELECT pid, x, y FROM ({_pts_sql()})
-  UNION ALL
-  SELECT pid, x, y FROM ({points.insert_batch_sql('lineitem')})
-)
-SELECT b.box_id, count(p.pid) AS cnt
-FROM {vals}
-LEFT JOIN allpts p
-  ON p.x BETWEEN b.bxlo AND b.bxhi AND p.y BETWEEN b.bylo AND b.byhi
-GROUP BY b.box_id"""
-
-
-# ------------------------------------------------------------ d=16 (B1/Q1)
-
-def get_index_d16(spark, sf_dir) -> SpatialIndex:
-    key = (id(spark), sf_dir, "d16")
-    if key not in _INDEX_CACHE:
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        li.createOrReplaceTempView("_d16_lineitem")
-        pts16 = spark.sql(
-            f"SELECT {points.dimd_select_sql(16)} FROM _d16_lineitem")
-        _INDEX_CACHE[key] = SpatialIndex.build(
-            spark, pts16, grid=Grid(GRID_G_3D, dims=3),
-            coord_cols=points.dim_cols(16))
-    return _INDEX_CACHE[key]
-
-
-def q_knn_k10_d16(spark, sf_dir) -> DataFrame:
-    """d=16, the reference's max dim config (tests/test.cpp:569-617):
-    grid cells key on the first two dims only, per-cell trees split all
-    16; the full-d blob bbox keeps phase-2 pruning exact (weak at d=16
-    by geometry — the audit metric to watch, not a correctness risk)."""
-    idx = get_index_d16(spark, sf_dir)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_d16q_lineitem")
-    q = spark.sql(
-        f"SELECT {points.dimd_select_sql(16, 'qid')} FROM _d16q_lineitem "
-        f"WHERE {points.QUERY_FILTER_SQL}")
-    return (knn_join(idx, q, 10)
-            .select("qid", F.col("rank").cast("long").alias("rank"),
-                    "nid", "dist_sq"))
-
-
-def sql_knn_k10_d16() -> str:
-    cols = points.dim_cols(16)
-    qsel = ", ".join([f"pid AS qid"] + [f"{c} AS q_{c}" for c in cols])
-    dist = "\n           + ".join(
-        f"(pts.{c} - q.q_{c}) * (pts.{c} - q.q_{c})" for c in cols)
-    return f"""
-WITH pts AS (SELECT {points.dimd_select_sql(16)} FROM lineitem),
-q AS (SELECT {qsel} FROM pts WHERE (pid % 101 = 7)),
-d AS (SELECT q.qid, pts.pid AS nid,
-             {dist} AS dist_sq
-      FROM q CROSS JOIN pts),
-r AS (SELECT qid, nid, dist_sq,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist_sq, nid) AS rank
-      FROM d)
-SELECT qid, CAST(rank AS BIGINT) AS rank, nid, dist_sq
-FROM r WHERE rank <= 10"""
-
-
 # ------------------------------------------------------------------ registry
 
-QUERIES = {
-    "cell_assign": q_cell_assign,
-    "index_stats": q_index_stats,
-    "range_count": q_range_count,
-    "range_count_10k": q_range_count_10k,
-    "range_report": q_range_report,
-    "range_report_10k": q_range_report_10k,
-    "circle_count": q_circle_count,
-    "knn_k1": q_knn_k1,
-    "knn_k10": q_knn_k10,
-    "knn_k100": q_knn_k100,
-    "knn_varden": q_knn_varden,
-    "knn_ood": q_knn_ood,
-    "hot_cell_knn": q_hot_cell_knn,
-    "knn_k10_d3": q_knn_k10_d3,
-    "insert_then_count": q_insert_then_count,
-    "delete_then_count": q_delete_then_count,
-    "update_then_knn": q_update_then_knn,
-    "update_then_knn_d3": q_update_then_knn_d3,
-    "update_then_knn_d5": q_update_then_knn_d5,
-    "insert_ratio_sweep": q_insert_ratio_sweep,
-    "delete_ratio_sweep": q_delete_ratio_sweep,
-    "incr_build_and_query": q_incr_build_and_query,
-    "knn_k10_d5": q_knn_k10_d5,
-    "knn_k100_d5": q_knn_k100_d5,
-    "knn_k10_d16": q_knn_k10_d16,
-    "range_count_d5": q_range_count_d5,
-    "range_report_d5": q_range_report_d5,
-    "circle_count_d5": q_circle_count_d5,
-    "knn_k10_f64": q_knn_k10_f64,
-    "range_count_f64": q_range_count_f64,
-    "range_report_f64": q_range_report_f64,
-    "circle_count_f64": q_circle_count_f64,
-    "update_then_knn_f64": q_update_then_knn_f64,
-    "snapshot_roundtrip": q_snapshot_roundtrip,
-    "sliding_window_count": q_sliding_window_count,
-    "sliding_window_knn": q_sliding_window_knn,
-    "knn_graph": q_knn_graph,
-    "incremental_build": q_incremental_build,
-    "incremental_delete": q_incremental_delete,
-    "point_in_polygon": q_point_in_polygon,
-    "tile_cells": q_tile_cells,
-    "distance_join": q_distance_join,
-    "rect_join": q_rect_join,
-    "polygon_overlay": q_polygon_overlay,
-    "dbscan": q_dbscan,
-    "kernel_density": q_kernel_density,
-    "closest_pair": q_closest_pair,
+# name -> (query, oracle SQL); dict order is the driver's sweep order
+GATES = {
+    "cell_assign": (q_cell_assign, sql_cell_assign()),
+    # same ground truth as cell_assign, via the index
+    "index_stats": (q_index_stats, sql_cell_assign()),
+    "range_count": range_gate(range_count, UNIFORM, BOXES),
+    # H4 rangeCountFix at reference scale: 10,000 generated rectangles
+    # (testFramework.h:617-648) — measures the range path above its
+    # per-job latency floor
+    "range_count_10k": range_gate(range_count, UNIFORM, BOXES_10K),
+    "range_report": range_gate(range_report, UNIFORM, BOXES_SMALL),
+    # H5 rangeQueryFix at reference recNum=10000 (testFramework.h:
+    # 680-713): materializing range REPORT over 10,000 small rects —
+    # exercises the report path's output volume above its per-job
+    # latency floor (the count-only 10k gate cannot)
+    "range_report_10k": range_gate(range_report, UNIFORM, BOXES_10K_REPORT),
+    "circle_count": range_gate(circle_count, UNIFORM, CIRCLES),
+    "knn_k1": knn_gate(UNIFORM, 1),
+    "knn_k10": knn_gate(UNIFORM, 10),
+    "knn_k100": knn_gate(UNIFORM, 100),
+    # skew path: variable-density clusters (hot cells + salting)
+    "knn_varden": knn_gate(VARDEN, 10),
+    # H11: build on uniform, query with varden-derived points
+    "knn_ood": knn_gate(UNIFORM, 10, qspec=VARDEN),
+    # north-rule skew path, oracle-gated: the salted varden index (see
+    # VARDEN_HOT) takes the (cell, salt) fan-out branch instead of the
+    # cold cell-keyed cogroup — without this gate the salted query path
+    # had pytest coverage only. Queries come from the uniform sample
+    # (also keeps the result distinct from knn_varden's). Reference
+    # analogue: kdTreeParallel.h's par_do subtree parallelism — one
+    # dense subtree never serializes on one worker there either.
+    "hot_cell_knn": knn_gate(VARDEN_HOT, 10, qspec=UNIFORM),
+    # 3-D kNN: per-cell trees split on (x,y,z) max-stretch, cells key
+    # on (x,y,z) — the reference's d=3 configuration
+    # (tests/test.cpp:569-617)
+    "knn_k10_d3": knn_gate(D3, 10),
+    # I1 batch insert -> range counts over the fixture boxes
+    "insert_then_count": range_gate(range_count, UNIFORM, BOXES,
+                                    inserts=True),
+    # D1/D2 batch delete -> range counts
+    "delete_then_count": range_gate(range_count, UNIFORM, BOXES,
+                                    deletes=True),
+    # I1+D1 combined, then kNN k=10 — the tag=2 workload of
+    # script/checkCorrect.sh (insert+delete before querying)
+    "update_then_knn": knn_gate(UNIFORM, 10, update=True),
+    # dimension-generic batch update (I1+D1 at d=3; the reference's
+    # batch ops are dim-templated, batch_insert.hpp:60-191) -> kNN k=10
+    "update_then_knn_d3": knn_gate(D3, 10, update=True),
+    # batch insert+delete then kNN at d=5 — the reference's
+    # checkCorrect.sh tag=2 configuration (insert AND delete before
+    # querying, at d=5 exactly as script/checkCorrect.sh:3-47 runs it)
+    "update_then_knn_d5": knn_gate(D5, 10, update=True),
+    "insert_ratio_sweep": sweep_gate(deletes=False),
+    "delete_ratio_sweep": sweep_gate(deletes=True),
+    "incr_build_and_query": (q_incr_build_and_query,
+                             sql_incr_build_and_query()),
+    # d=5 configuration (tests/test.cpp:584): per-cell trees split all
+    # 5 dims; cell pruning degrades with d (measured in bench via
+    # knn_candidates cells-per-query) but stays exact
+    "knn_k10_d5": knn_gate(D5, 10),
+    # k=100 at d=5 — the reference sweep varies k and d independently
+    # (script/checkCorrect.sh, tests/test.cpp:84-96); exercises the
+    # large-k super-stats fallback against the high-d candidate path
+    "knn_k100_d5": knn_gate(D5, 100),
+    # d=16, the reference's max dim config (tests/test.cpp:569-617):
+    # cells key on the first three dims, per-cell trees split all 16;
+    # the full-d blob bbox keeps phase-2 pruning exact (weak at d=16 by
+    # geometry — the audit metric to watch, not a correctness risk)
+    "knn_k10_d16": knn_gate(D16, 10),
+    # range count at d=5 — reference parity: script/checkCorrect.sh runs
+    # queryType 1 (range count) at d=5 over the dim-templated
+    # range_count.hpp; cell enumeration keys on the grid dims,
+    # classification and the kernel scan use all 5 dims
+    "range_count_d5": range_gate(range_count, D5, BOXES_D5),
+    # range report at d=5 (queryType 2 of checkCorrect.sh): emits all
+    # five coordinate columns per matched point
+    "range_report_d5": range_gate(range_report, D5, BOXES_D5),
+    # ball count at d=5 (range_count.hpp:99-131 is dim-templated; the
+    # checkCorrect.sh sweep varies queryType and d independently): cell
+    # enumeration keys on the grid's 4 dims via the ball's bounding box,
+    # classification + the kernel scan use the exact 5-d min/max dist²
+    "circle_count_d5": range_gate(circle_count, D5, CIRCLES_D5),
+    "knn_k10_f64": knn_gate(F64, 10),
+    # integer box bounds, double coordinates (inclusive compares on
+    # int-valued bounds are the identical predicate in numpy, Spark and
+    # DuckDB)
+    "range_count_f64": range_gate(range_count, F64, BOXES),
+    # coordinates come back DOUBLE, hash-compared bit-for-bit against
+    # DuckDB's doubles
+    "range_report_f64": range_gate(range_report, F64, BOXES_SMALL),
+    # integer centers/radii, double coordinates: dist² is a sum of
+    # (sub, mul) chains on bit-identical doubles — IEEE-identical across
+    # numpy/Spark/DuckDB because each operand arrives exactly and every
+    # op is correctly rounded in the same order
+    "circle_count_f64": range_gate(circle_count, F64, CIRCLES),
+    # I1+D1 then kNN k=10, float mode — the tag=2 checkCorrect.sh
+    # workload over double coordinates (the reference's double test
+    # build runs the same insert/delete/query chain)
+    "update_then_knn_f64": knn_gate(F64, 10, update=True),
+    "snapshot_roundtrip": (q_snapshot_roundtrip, box_count_sql(
+        UNIFORM, BOXES_SMALL, live_sql(UNIFORM,
+                                       inserts=[UNIFORM.insert_sql()]))),
+    "sliding_window_count": (q_sliding_window_count, box_count_sql(
+        VARDEN, BOXES, live_sql(VARDEN, "slice >= 5"))),
+    "sliding_window_knn": (q_sliding_window_knn, sql_sliding_window_knn()),
+    # H10 generate_knn: k=5 adjacency for a deterministic node sample
+    # (full self-kNN graph at sf0.01 would need a 3.6e9-pair oracle; the
+    # sampled graph exercises the identical engine path)
+    "knn_graph": knn_gate(UNIFORM, 5, where=KNN_GRAPH_FILTER),
+    "incremental_build": (q_incremental_build,
+                          box_count_sql(UNIFORM, BOXES_SMALL)),
+    "incremental_delete": (q_incremental_delete, box_count_sql(
+        UNIFORM, BOXES_SMALL, live_sql(UNIFORM, "slice >= 5"))),
+    "point_in_polygon": (q_point_in_polygon, polygon_join_sql(
+        f"SELECT pid, x, y FROM ({UNIFORM.points_sql()})", POLYGONS)),
+    "tile_cells": (q_tile_cells, tile_cell_assign_sql(
+        Grid(GRID_G), fixtures.tiles_values_sql(TILES))),
+    "distance_join": (q_distance_join, sql_distance_join()),
+    "rect_join": (q_rect_join, sql_rect_join()),
+    "polygon_overlay": (q_polygon_overlay, polygon_join_oracle_sql(
+        fixtures.polygon_verts_values_sql(POLY_A, "vva"),
+        fixtures.polygon_verts_values_sql(POLY_B, "vvb"))),
+    "dbscan": (q_dbscan, sql_dbscan()),
+    "kernel_density": (q_kernel_density, sql_kernel_density()),
+    "closest_pair": (q_closest_pair, sql_closest_pair()),
 }
 
-ORACLES = {
-    "cell_assign": sql_cell_assign(),
-    "index_stats": sql_cell_assign(),  # same ground truth, via the index
-    "range_count": sql_range_count(),
-    "range_count_10k": sql_range_count_10k(),
-    "range_report": sql_range_report(),
-    "range_report_10k": sql_range_report_10k(),
-    "circle_count": sql_circle_count(),
-    "knn_k1": _sql_knn(1),
-    "knn_k10": _sql_knn(10),
-    "knn_k100": _sql_knn(100),
-    "knn_varden": _sql_knn(10, dist="varden"),
-    "knn_ood": _sql_knn(10, dist="uniform", qdist="varden"),
-    "hot_cell_knn": _sql_knn(10, dist="varden", qdist="uniform"),
-    "knn_k10_d3": sql_knn_k10_d3(),
-    "insert_then_count": sql_insert_then_count(),
-    "delete_then_count": sql_delete_then_count(),
-    "update_then_knn": sql_update_then_knn(),
-    "update_then_knn_d3": sql_update_then_knn_d3(),
-    "update_then_knn_d5": sql_update_then_knn_d5(),
-    "insert_ratio_sweep": sql_insert_ratio_sweep(),
-    "delete_ratio_sweep": sql_delete_ratio_sweep(),
-    "incr_build_and_query": sql_incr_build_and_query(),
-    "knn_k10_d5": sql_knn_k10_d5(),
-    "knn_k100_d5": _sql_knn_d5(100),
-    "knn_k10_d16": sql_knn_k10_d16(),
-    "range_count_d5": sql_range_count_d5(),
-    "range_report_d5": sql_range_report_d5(),
-    "circle_count_d5": sql_circle_count_d5(),
-    "knn_k10_f64": sql_knn_k10_f64(),
-    "range_count_f64": sql_range_count_f64(),
-    "range_report_f64": sql_range_report_f64(),
-    "circle_count_f64": sql_circle_count_f64(),
-    "update_then_knn_f64": sql_update_then_knn_f64(),
-    "snapshot_roundtrip": sql_snapshot_roundtrip(),
-    "sliding_window_count": sql_sliding_window_count(),
-    "sliding_window_knn": sql_sliding_window_knn(),
-    "knn_graph": sql_knn_graph(),
-    "incremental_build": sql_incremental_build(),
-    "incremental_delete": sql_incremental_delete(),
-    "point_in_polygon": sql_point_in_polygon(),
-    "tile_cells": sql_tile_cells(),
-    "distance_join": sql_distance_join(),
-    "rect_join": sql_rect_join(),
-    "polygon_overlay": sql_polygon_overlay(),
-    "dbscan": sql_dbscan(),
-    "kernel_density": sql_kernel_density(),
-    "closest_pair": sql_closest_pair(),
-}
+QUERIES = {name: q for name, (q, _) in GATES.items()}
+ORACLES = {name: sql for name, (_, sql) in GATES.items()}

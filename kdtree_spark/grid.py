@@ -119,9 +119,6 @@ class Grid:
     # divide — Spark, DuckDB and numpy floor the SAME correctly-rounded
     # quotient, so the three agree bit-for-bit on every input (what
     # matters is cross-engine consistency, not the exact boundary)
-    def spark_cell_sql_f64(self, x: str = "x", y: str = "y") -> str:
-        return self.spark_cell_sql_f64_nd([x, y] if self.dims == 2 else None)
-
     def spark_cell_sql_f64_nd(self, cols) -> str:
         assert len(cols) >= self.dims, (cols, self.dims)
         def fl(c):
@@ -132,18 +129,7 @@ class Grid:
             expr = f"(({expr}) * {self.g} + {fl(c)})"
         return expr
 
-    def duckdb_cell_sql_f64(self, x: str = "x", y: str = "y") -> str:
-        return (f"(CAST(FLOOR({x} / {self.cw}.0) AS BIGINT) * {self.g}"
-                f" + CAST(FLOOR({y} / {self.cw}.0) AS BIGINT))")
-
     # -- numpy
-    def cell_of(self, x: np.ndarray, y: np.ndarray) -> np.ndarray:
-        assert self.dims == 2
-        if np.issubdtype(np.asarray(x).dtype, np.floating):
-            return (np.floor(x / float(self.cw)).astype(np.int64) * self.g
-                    + np.floor(y / float(self.cw)).astype(np.int64))
-        return (x // self.cw) * self.g + (y // self.cw)
-
     def cell_coord(self, cell: np.ndarray, j: int) -> np.ndarray:
         """j-th grid coordinate of a row-major cell id (numpy)."""
         c = cell // (self.g ** (self.dims - 1 - j))
@@ -155,30 +141,3 @@ class Grid:
         xlo = self.cell_coord(cell, 0) * self.cw
         ylo = self.cell_coord(cell, 1) * self.cw
         return xlo, ylo, xlo + self.cw - 1, ylo + self.cw - 1
-
-    def cells_overlapping_box(self, xlo, ylo, xhi, yhi) -> np.ndarray:
-        """All cell ids whose geometric extent intersects the box."""
-        cx0 = max(0, int(xlo) // self.cw)
-        cx1 = min(self.g - 1, int(xhi) // self.cw)
-        cy0 = max(0, int(ylo) // self.cw)
-        cy1 = min(self.g - 1, int(yhi) // self.cw)
-        if cx1 < cx0 or cy1 < cy0:
-            return np.empty(0, np.int64)
-        cxs = np.arange(cx0, cx1 + 1, dtype=np.int64)
-        cys = np.arange(cy0, cy1 + 1, dtype=np.int64)
-        return (cxs[:, None] * self.g + cys[None, :]).ravel()
-
-
-def box_min_dist2(qx: np.ndarray, qy: np.ndarray, boxes: np.ndarray
-                  ) -> np.ndarray:
-    """Squared L2 distance from each query to each box (m_q, m_box).
-
-    boxes: (m, 4) [xlo, ylo, xhi, yhi]. The distributed analogue of the
-    reference's `p2b_min_distance` (query_op/nn_search.hpp:22-35), used
-    to decide which cells a kNN query must visit.
-    """
-    dx = np.maximum(np.maximum(boxes[None, :, 0] - qx[:, None],
-                               qx[:, None] - boxes[None, :, 2]), 0).astype(np.float64)
-    dy = np.maximum(np.maximum(boxes[None, :, 1] - qy[:, None],
-                               qy[:, None] - boxes[None, :, 3]), 0).astype(np.float64)
-    return dx * dx + dy * dy

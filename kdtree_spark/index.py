@@ -30,6 +30,7 @@ metrics (the analogue of the reference's per-run timing lines).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
@@ -41,6 +42,8 @@ from pyspark.sql import functions as F
 
 from .grid import Grid
 from .localtree import LocalKDTree
+
+log = logging.getLogger(__name__)
 
 INDEX_SCHEMA = ("cell long, salt int, cnt long, nextra long, ntomb long, "
                 "depth int, xmin long, ymin long, xmax long, ymax long, "
@@ -92,6 +95,32 @@ PROBE_FRACTION = 32
 def _probe_cap(d: int, n_live: int) -> int:
     floor = PROBE_CAP * min(2 ** (d - 2), 4) if d > 2 else PROBE_CAP
     return max(floor, n_live // PROBE_FRACTION)
+
+
+def _coarsen_aggs(d: int) -> list:
+    """Aggregates that coarsen per-cell stats (ccnt, data bbox, and the
+    mn{j}/mx{j} bounds of dims >= 2) onto a coarser grid."""
+    aggs = [F.sum("ccnt").alias("ccnt"),
+            F.min("xmin").alias("xmin"), F.min("ymin").alias("ymin"),
+            F.max("xmax").alias("xmax"), F.max("ymax").alias("ymax")]
+    for j in range(2, d):
+        aggs.append(F.min(f"mn{j}").alias(f"mn{j}"))
+        aggs.append(F.max(f"mx{j}").alias(f"mx{j}"))
+    return aggs
+
+
+def _checkpoint_rdd(frame: DataFrame):
+    """Handle to a localCheckpoint()ed frame's materialized RDD (the
+    LogicalRDD it wraps), so unpersist() can free its blocks.
+    DataFrame.unpersist is a cache-manager call and does NOT free
+    localCheckpoint blocks. None, with a warning, if the py4j plan
+    walk fails: those blocks then wait for GC + ContextCleaner."""
+    try:
+        return frame._jdf.queryExecution().logical().rdd()
+    except Exception as ex:
+        log.warning("no checkpoint RDD handle (blocks freed only by GC): "
+                    "%s", ex)
+        return None
 
 
 def _tree_row(cell: int, salt: int, tree: LocalKDTree) -> dict:
@@ -306,7 +335,7 @@ class SpatialIndex:
         (range_count.hpp:78-80) instead of visiting every leaf: a box
         costs O(perimeter) cells per level, never O(area) fine cells.
         """
-        if getattr(self, "_pyramid", None) is None:
+        if self._pyramid is None:
             F_ = PYRAMID_FACTOR
             levels = []
             cur = self.cell_stats()
@@ -315,15 +344,8 @@ class SpatialIndex:
                 ng = (curg + F_ - 1) // F_
                 parent = F.expr(
                     self.grid.parent_cell_sql("cell", curg, F_, ng))
-                aggs = [F.sum("ccnt").alias("ccnt"),
-                        F.min("xmin").alias("xmin"),
-                        F.min("ymin").alias("ymin"),
-                        F.max("xmax").alias("xmax"),
-                        F.max("ymax").alias("ymax")]
-                for j in range(2, len(self.coord_cols)):
-                    aggs.append(F.min(f"mn{j}").alias(f"mn{j}"))
-                    aggs.append(F.max(f"mx{j}").alias(f"mx{j}"))
-                agg = (cur.groupBy(parent.alias("cell")).agg(*aggs)
+                agg = (cur.groupBy(parent.alias("cell"))
+                       .agg(*_coarsen_aggs(len(self.coord_cols)))
                        .withColumn("maxsalt", F.lit(0)))
                 nxt = agg.select(
                     *[F.col(c).alias(c) for c in agg.columns]).cache()
@@ -352,18 +374,11 @@ class SpatialIndex:
         tree, build_tree.hpp:49-70, which every query can afford to
         descend)."""
         if self._super_stats is None:
-            d = len(self.coord_cols)
-            g = self.grid.g
             S, sg = self.super_grid()
-            cs = self.cell_stats()
-            scell = F.expr(self.grid.parent_cell_sql("cell", g, S, sg))
-            aggs = [F.sum("ccnt").alias("ccnt"),
-                    F.min("xmin").alias("xmin"), F.min("ymin").alias("ymin"),
-                    F.max("xmax").alias("xmax"), F.max("ymax").alias("ymax")]
-            for j in range(2, d):
-                aggs.append(F.min(f"mn{j}").alias(f"mn{j}"))
-                aggs.append(F.max(f"mx{j}").alias(f"mx{j}"))
-            agg = cs.groupBy(scell.alias("scell")).agg(*aggs)
+            scell = F.expr(
+                self.grid.parent_cell_sql("cell", self.grid.g, S, sg))
+            agg = (self.cell_stats().groupBy(scell.alias("scell"))
+                   .agg(*_coarsen_aggs(len(self.coord_cols))))
             self._super_stats = agg.select(
                 *[F.col(c).alias(c) for c in agg.columns]).cache()
         return self._super_stats
@@ -464,10 +479,7 @@ class SpatialIndex:
         # (one fewer Spark job per update)
         touched = (ups.select("cell").distinct()
                    .localCheckpoint(eager=False))
-        try:
-            touched_rdd = touched._jdf.queryExecution().logical().rdd()
-        except Exception:
-            touched_rdd = None
+        touched_rdd = _checkpoint_rdd(touched)
         touched_blobs = self.df.join(F.broadcast(touched), "cell", "semi")
         new_blobs = (ups.groupby("cell")
                      .cogroup(touched_blobs.groupby("cell"))
@@ -482,20 +494,12 @@ class SpatialIndex:
         # chained updates grow the plan by one anti-join per fragment —
         # linear, not exponential.
         delta = new_blobs.localCheckpoint(eager=True)
-        # handle to the checkpoint's materialized RDD (the LogicalRDD
-        # the checkpointed frame wraps — queryExecution().toRdd() is
-        # only a wrapper over it): DataFrame.unpersist is a cache-
-        # manager call and does NOT free localCheckpoint blocks, so
-        # unpersist() releases them through this handle instead of
-        # waiting for nondeterministic GC + ContextCleaner
-        try:
-            delta_rdd = delta._jdf.queryExecution().logical().rdd()
-        except Exception:
-            delta_rdd = None
         frags = [f.join(F.broadcast(touched), "cell", "left_anti")
                  for f in self._frags] + [delta]
+        # unpersist() frees the checkpoint blocks through these handles
+        # instead of waiting for nondeterministic GC + ContextCleaner
         handles = dict(self._ckpt_handles)
-        handles[str(uuid.uuid4())[:8]] = delta_rdd
+        handles[str(uuid.uuid4())[:8]] = _checkpoint_rdd(delta)
         handles[str(uuid.uuid4())[:8]] = touched_rdd
         cached = list(self._cached_frames)
         compacted = False
@@ -509,12 +513,8 @@ class SpatialIndex:
             for f in frags[1:]:
                 union = union.unionByName(f)
             full = union.localCheckpoint(eager=True)
-            try:
-                full_rdd = full._jdf.queryExecution().logical().rdd()
-            except Exception:
-                full_rdd = None
             frags = [full]
-            handles = {str(uuid.uuid4())[:8]: full_rdd}
+            handles = {str(uuid.uuid4())[:8]: _checkpoint_rdd(full)}
             cached = []
             compacted = True
         new_df = frags[0]
@@ -555,7 +555,7 @@ class SpatialIndex:
         its parent's fragments, so freeing those would sever the child's
         truncated lineage. After a compaction the child inherits
         nothing, and the superseded version's whole storage is freed."""
-        pyramid = [s for _, _, s in (getattr(self, "_pyramid", None) or [])]
+        pyramid = [s for _, _, s in (self._pyramid or [])]
         for st in (self._cell_stats, self._super_stats, *pyramid):
             try:
                 if st is not None:

@@ -29,8 +29,16 @@ from pyspark.sql import functions as F
 PID_SQL = ("(l_orderkey * 2654435761 + l_linenumber * 40503 "
            "+ l_partkey * 2246822519 + l_suppkey * 3266489917)")
 
-UNIFORM_X_SQL = f"((({PID_SQL} % 1000003) * 7919) % 1000000)"
-UNIFORM_Y_SQL = f"((({PID_SQL} % 999983) * 104729) % 1000000)"
+# uniform dims (the reference's dim dispatch covers d in
+# {2,3,5,7,9,10,12,16}, tests/test.cpp:569-617): every dim is the same
+# multiplicative-scramble family with its own (modulus, multiplier)
+# prime pair
+_DIM_PRIMES = [
+    (1000003, 7919), (999983, 104729), (999979, 7907), (999961, 6011),
+    (999959, 4001), (999953, 104717), (999931, 9973), (999917, 11939),
+    (999907, 21881), (999883, 32749), (999863, 44683), (999853, 57859),
+    (999809, 71411), (999773, 86813), (999769, 99991), (999763, 30011),
+]
 
 _CLUSTER_SQL = "(l_partkey % 64)"
 _VCX_SQL = f"(({_CLUSTER_SQL} * 2654435761) % 1000000)"
@@ -43,98 +51,81 @@ VARDEN_X_SQL = (f"GREATEST(0, LEAST(999999, {_VCX_SQL} + "
 VARDEN_Y_SQL = (f"GREATEST(0, LEAST(999999, {_VCY_SQL} + "
                 f"((({PID_SQL} % 999983) % (2 * {_SIG_SQL} + 1)) - {_SIG_SQL})))")
 
-# third dimension for d=3 workloads (the reference tests d in {2,3,5,...},
-# tests/test.cpp:569-617); same multiplicative-scramble family
-UNIFORM_Z_SQL = f"((({PID_SQL} % 999979) * 7907) % 1000000)"
-
-# dims 4+5 for the d=5 configuration (tests/test.cpp:584)
-UNIFORM_W_SQL = f"((({PID_SQL} % 999961) * 6011) % 1000000)"
-UNIFORM_V_SQL = f"((({PID_SQL} % 999959) * 4001) % 1000000)"
-
-D5_COLS = ("x", "y", "z", "w", "v")
-D5_EXPRS = (UNIFORM_X_SQL, UNIFORM_Y_SQL, UNIFORM_Z_SQL,
-            UNIFORM_W_SQL, UNIFORM_V_SQL)
-
-
-def d5_select_sql(id_alias: str = "pid") -> str:
-    return ", ".join([f"{PID_SQL} AS {id_alias}"]
-                     + [f"{e} AS {c}" for c, e in zip(D5_COLS, D5_EXPRS)])
-
-
-# arbitrary-d configurations (reference dim dispatch covers d in
-# {2,3,5,7,9,10,12,16}, tests/test.cpp:569-617): every dim is the same
-# multiplicative-scramble family with its own (modulus, multiplier)
-# prime pair; the first five pairs are exactly D5's, so d<=5 derivations
-# are unchanged
-_DIM_PRIMES = [
-    (1000003, 7919), (999983, 104729), (999979, 7907), (999961, 6011),
-    (999959, 4001), (999953, 104717), (999931, 9973), (999917, 11939),
-    (999907, 21881), (999883, 32749), (999863, 44683), (999853, 57859),
-    (999809, 71411), (999773, 86813), (999769, 99991), (999763, 30011),
-]
-
-
-def dim_cols(d: int) -> tuple:
-    names = list(D5_COLS) + [f"c{i}" for i in range(5, d)]
-    return tuple(names[:d])
-
-
-def dim_exprs(d: int) -> tuple:
-    assert 2 <= d <= len(_DIM_PRIMES)
-    return tuple(f"((({PID_SQL} % {p}) * {m}) % 1000000)"
-                 for p, m in _DIM_PRIMES[:d])
-
-
-def dimd_select_sql(d: int, id_alias: str = "pid") -> str:
-    return ", ".join([f"{PID_SQL} AS {id_alias}"]
-                     + [f"{e} AS {c}"
-                        for c, e in zip(dim_cols(d), dim_exprs(d))])
+# float mode: one fractional prime per coord (see _with_frac)
+_F64_FRAC = (997, 991)
 
 # time-slice label for the sliding-window workload (insertOsmByTime analogue,
 # tests/testFramework.h:818-870): 10 slices keyed off pid
 SLICE_SQL = f"({PID_SQL} % 10)"
 
 
-def points_select_sql(dist: str = "uniform") -> str:
-    """SELECT-list fragment producing (pid, x, y, slice) from lineitem."""
+def dim_cols(d: int) -> tuple:
+    names = ["x", "y", "z", "w", "v"] + [f"c{i}" for i in range(5, d)]
+    return tuple(names[:d])
+
+
+def _scrambles(primes, d: int) -> tuple:
+    assert 1 <= d <= len(primes), d
+    return tuple(f"((({PID_SQL} % {p}) * {m}) % 1000000)"
+                 for p, m in primes[:d])
+
+
+def _with_frac(exprs, fracs) -> tuple:
+    """Float-mode coords: the integer scramble plus a deterministic
+    fractional part. Every term is an exact integer fed through ONE
+    double divide and ONE double add (both correctly rounded), so
+    Spark, DuckDB and numpy produce bit-identical doubles — the
+    float-mode gates' cross-engine contract. DuckDB note: the divisor
+    must be CAST(... AS DOUBLE); a 997.0 literal is DECIMAL there and
+    decimal division is not IEEE."""
+    assert len(exprs) <= len(fracs), (len(exprs), fracs)
+    return tuple(f"CAST({e} AS DOUBLE)"
+                 f" + ({PID_SQL} % {p}) / CAST({p} AS DOUBLE)"
+                 for e, p in zip(exprs, fracs))
+
+
+def _coord_exprs(dist: str, dims: int, f64: bool) -> tuple:
+    """Per-dim coordinate SQL of a point set: uniform at any d <= 16,
+    varden at d=2; f64=True makes every coord a double."""
     if dist == "uniform":
-        xs, ys = UNIFORM_X_SQL, UNIFORM_Y_SQL
-    elif dist == "varden":
-        xs, ys = VARDEN_X_SQL, VARDEN_Y_SQL
+        exprs = _scrambles(_DIM_PRIMES, dims)
+    elif dist == "varden" and dims == 2:
+        exprs = (VARDEN_X_SQL, VARDEN_Y_SQL)
     else:
-        raise ValueError(dist)
-    return (f"{PID_SQL} AS pid, {xs} AS x, {ys} AS y, {SLICE_SQL} AS slice")
+        raise ValueError((dist, dims))
+    return _with_frac(exprs, _F64_FRAC) if f64 else exprs
 
 
-def points_sql(table: str = "lineitem", dist: str = "uniform") -> str:
-    return f"SELECT {points_select_sql(dist)} FROM {table}"
+def points_select_sql(dist: str = "uniform", dims: int = 2,
+                      f64: bool = False) -> str:
+    """SELECT-list fragment producing (pid, <dim_cols(dims)>, slice)
+    from lineitem."""
+    coords = [f"{e} AS {c}"
+              for c, e in zip(dim_cols(dims), _coord_exprs(dist, dims, f64))]
+    return ", ".join([f"{PID_SQL} AS pid", *coords, f"{SLICE_SQL} AS slice"])
 
 
-def f64_select_sql(id_alias: str = "pid") -> str:
-    """(pid, x double, y double): the uniform integer coords plus a
-    deterministic fractional part. Every term is an exact integer fed
-    through ONE double divide and ONE double add (both correctly
-    rounded), so Spark, DuckDB and numpy produce bit-identical doubles
-    — the float-mode gate's cross-engine contract. DuckDB note: the
-    divisor must be CAST(... AS DOUBLE); a 997.0 literal is DECIMAL
-    there and decimal division is not IEEE."""
-    return (f"{PID_SQL} AS {id_alias}, "
-            f"CAST({UNIFORM_X_SQL} AS DOUBLE)"
-            f" + ({PID_SQL} % 997) / CAST(997 AS DOUBLE) AS x, "
-            f"CAST({UNIFORM_Y_SQL} AS DOUBLE)"
-            f" + ({PID_SQL} % 991) / CAST(991 AS DOUBLE) AS y")
+def points_sql(table: str = "lineitem", dist: str = "uniform",
+               dims: int = 2, f64: bool = False) -> str:
+    return f"SELECT {points_select_sql(dist, dims, f64)} FROM {table}"
 
 
-def load_points(spark: SparkSession, sf_dir: str, dist: str = "uniform"
-                ) -> DataFrame:
+def lineitem_view(spark: SparkSession, sf_dir: str) -> str:
+    """Register sf_dir's lineitem parquet as a temp view; returns its
+    name, the `table` argument for this module's SQL builders."""
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
+        .createOrReplaceTempView("_pts_lineitem")
+    return "_pts_lineitem"
+
+
+def load_points(spark: SparkSession, sf_dir: str, dist: str = "uniform",
+                dims: int = 2) -> DataFrame:
     """Derive the point DataFrame from lineitem parquet.
 
     Narrow projection: Catalyst prunes the scan to the four key columns
     (check: ReadSchema in `.explain("formatted")`).
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_pts_lineitem")
-    return spark.sql(points_sql("_pts_lineitem", dist))
+    return spark.sql(points_sql(lineitem_view(spark, sf_dir), dist, dims))
 
 
 # -- query points: a deterministic subset of the data (the reference queries
@@ -144,19 +135,19 @@ QUERY_FILTER_SQL = f"({PID_SQL} % 101 = 7)"  # ~1% of rows, deterministic
 
 
 def query_points_sql(table: str = "lineitem", dist: str = "uniform",
-                     qdist: str | None = None) -> str:
+                     qdist: str | None = None, dims: int = 2,
+                     f64: bool = False, where: str = QUERY_FILTER_SQL) -> str:
     """Query set = ~1% sample; optionally drawn from a different
     distribution than the build set (the OOD workload, test.cpp:494-509)."""
-    sel = points_select_sql(qdist or dist)
-    return (f"SELECT pid AS qid, x, y FROM "
-            f"(SELECT {sel} FROM {table} WHERE {QUERY_FILTER_SQL})")
+    sel = points_select_sql(qdist or dist, dims, f64)
+    return (f"SELECT pid AS qid, {', '.join(dim_cols(dims))} FROM "
+            f"(SELECT {sel} FROM {table} WHERE {where})")
 
 
 def load_query_points(spark: SparkSession, sf_dir: str, dist: str = "uniform",
-                      qdist: str | None = None) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_qpts_lineitem")
-    return spark.sql(query_points_sql("_qpts_lineitem", dist, qdist))
+                      qdist: str | None = None, dims: int = 2) -> DataFrame:
+    return spark.sql(query_points_sql(lineitem_view(spark, sf_dir), dist,
+                                      qdist, dims))
 
 
 # -- update batches (insert/delete fixtures; the reference reads a sibling
@@ -165,72 +156,32 @@ def load_query_points(spark: SparkSession, sf_dir: str, dist: str = "uniform",
 INSERT_FILTER_SQL = f"({PID_SQL} % 97 = 13)"   # ~1% batch to insert
 DELETE_FILTER_SQL = f"({PID_SQL} % 89 = 11)"   # ~1% batch to delete
 
-# inserted points get fresh pids + shifted coords so they don't collide
+# inserted points get fresh pids + their own scramble primes (and, in
+# float mode, their own fractional primes) so they don't collide
 INSERT_PID_SQL = f"({PID_SQL} + 4000000000000000)"
-INSERT_X_SQL = f"((({PID_SQL} % 1000033) * 6007) % 1000000)"
-INSERT_Y_SQL = f"((({PID_SQL} % 999979) * 31771) % 1000000)"
-INSERT_Z_SQL = f"((({PID_SQL} % 999961) * 16033) % 1000000)"
+_INSERT_PRIMES = [(1000033, 6007), (999979, 31771), (999961, 16033),
+                  (999959, 23003), (999953, 37019)]
+_INSERT_F64_FRAC = (983, 977)
 
 
-def insert_batch_sql(table: str = "lineitem") -> str:
-    return (f"SELECT {INSERT_PID_SQL} AS pid, {INSERT_X_SQL} AS x, "
-            f"{INSERT_Y_SQL} AS y FROM {table} WHERE {INSERT_FILTER_SQL}")
-
-
-def insert_batch_d3_sql(table: str = "lineitem") -> str:
-    return (f"SELECT {INSERT_PID_SQL} AS pid, {INSERT_X_SQL} AS x, "
-            f"{INSERT_Y_SQL} AS y, {INSERT_Z_SQL} AS z "
+def insert_batch_sql(table: str = "lineitem", dims: int = 2,
+                     f64: bool = False) -> str:
+    """Insert batch (pid, <dim_cols(dims)>) for d <= 5."""
+    exprs = _scrambles(_INSERT_PRIMES, dims)
+    if f64:
+        exprs = _with_frac(exprs, _INSERT_F64_FRAC)
+    coords = ", ".join(f"{e} AS {c}" for c, e in zip(dim_cols(dims), exprs))
+    return (f"SELECT {INSERT_PID_SQL} AS pid, {coords} "
             f"FROM {table} WHERE {INSERT_FILTER_SQL}")
 
 
-INSERT_W_SQL = f"((({PID_SQL} % 999959) * 23003) % 1000000)"
-INSERT_V_SQL = f"((({PID_SQL} % 999953) * 37019) % 1000000)"
-
-
-def insert_batch_d5_sql(table: str = "lineitem") -> str:
-    return (f"SELECT {INSERT_PID_SQL} AS pid, {INSERT_X_SQL} AS x, "
-            f"{INSERT_Y_SQL} AS y, {INSERT_Z_SQL} AS z, "
-            f"{INSERT_W_SQL} AS w, {INSERT_V_SQL} AS v "
-            f"FROM {table} WHERE {INSERT_FILTER_SQL}")
-
-
-def delete_batch_d5_sql(table: str = "lineitem") -> str:
-    return (f"SELECT pid, x, y, z, w, v FROM "
-            f"(SELECT {d5_select_sql()} FROM {table} "
-            f"WHERE {DELETE_FILTER_SQL})")
-
-
-def insert_batch_f64_sql(table: str = "lineitem") -> str:
-    """Float-mode insert batch: integer scrambles + one fractional
-    divide/add per coord — the same bit-identical-double contract as
-    f64_select_sql (distinct fractional primes, so inserted points
-    never collide with existing ones)."""
-    return (f"SELECT {INSERT_PID_SQL} AS pid, "
-            f"CAST({INSERT_X_SQL} AS DOUBLE)"
-            f" + ({PID_SQL} % 983) / CAST(983 AS DOUBLE) AS x, "
-            f"CAST({INSERT_Y_SQL} AS DOUBLE)"
-            f" + ({PID_SQL} % 977) / CAST(977 AS DOUBLE) AS y "
-            f"FROM {table} WHERE {INSERT_FILTER_SQL}")
-
-
-def delete_batch_f64_sql(table: str = "lineitem") -> str:
-    """Float-mode delete batch: existing f64 points (bit-identical
-    coords route the delete to the right cell)."""
-    return (f"SELECT pid, x, y FROM (SELECT {f64_select_sql()} "
-            f"FROM {table} WHERE {DELETE_FILTER_SQL})")
-
-
-def delete_batch_sql(table: str = "lineitem", dist: str = "uniform") -> str:
-    """Deletes target existing points (FullCovered semantics on the match)."""
-    sel = points_select_sql(dist)
-    return (f"SELECT pid, x, y FROM (SELECT {sel} FROM {table} "
-            f"WHERE {DELETE_FILTER_SQL})")
-
-
-def delete_batch_d3_sql(table: str = "lineitem") -> str:
-    return (f"SELECT pid, x, y, z FROM "
-            f"(SELECT {PID_SQL} AS pid, {UNIFORM_X_SQL} AS x, "
-            f"{UNIFORM_Y_SQL} AS y, {UNIFORM_Z_SQL} AS z FROM {table} "
+def delete_batch_sql(table: str = "lineitem", dims: int = 2,
+                     dist: str = "uniform", f64: bool = False) -> str:
+    """Deletes target existing points (FullCovered semantics on the
+    match; in float mode bit-identical coords route the delete to the
+    right cell)."""
+    return (f"SELECT pid, {', '.join(dim_cols(dims))} FROM "
+            f"(SELECT {points_select_sql(dist, dims, f64)} FROM {table} "
             f"WHERE {DELETE_FILTER_SQL})")
 
 
@@ -245,8 +196,7 @@ def sweep_insert_sql(table: str, step: int) -> str:
     """Insert batch for sweep leg `step` (1-based)."""
     mod, rem = SWEEP_LEGS[step - 1]
     pid = f"({PID_SQL} + {4_000_000_000_000_000 + step * 1_000_000_000_000_000})"
-    x = f"((({PID_SQL} % 1000033) * {6007 + 2 * step}) % 1000000)"
-    y = f"((({PID_SQL} % 999979) * {31771 + 2 * step}) % 1000000)"
+    x, y = _scrambles([(p, m + 2 * step) for p, m in _INSERT_PRIMES], 2)
     return (f"SELECT {pid} AS pid, {x} AS x, {y} AS y "
             f"FROM {table} WHERE ({PID_SQL} % {mod} = {rem})")
 
@@ -256,9 +206,8 @@ def sweep_delete_sql(table: str, step: int) -> str:
     Legs can overlap (nested moduli); repeated deletes of an id are
     ignored (partial-cover semantics)."""
     mod, rem = SWEEP_LEGS[step - 1]
-    sel = points_select_sql("uniform")
-    return (f"SELECT pid, x, y FROM (SELECT {sel} FROM {table} "
-            f"WHERE ({PID_SQL} % {mod} = {rem}))")
+    return (f"SELECT pid, x, y FROM (SELECT {points_select_sql()} "
+            f"FROM {table} WHERE ({PID_SQL} % {mod} = {rem}))")
 
 
 # probe set for the H9 interleaved build-and-query workload (~0.1%)

@@ -163,7 +163,7 @@ def _enum_rows(q: list, ub: np.ndarray, grid, fmode: bool):
     finite = np.isfinite(ub)
     if fmode:
         # float cells: floor(x / cw), mirroring the cell assignment
-        # formula (grid.spark_cell_sql_f64)
+        # formula (Grid.spark_cell_sql_f64_nd)
         r = np.zeros(n)
         r[finite] = np.sqrt(ub[finite]) + 1.0
         c0 = [np.clip(np.floor((qj - r) / cw), 0, g - 1)

@@ -105,13 +105,6 @@ def _boxes_df(index: SpatialIndex, boxes) -> DataFrame:
     return index.spark.createDataFrame(pd.DataFrame(cols))
 
 
-def _cell_stats_df(index: SpatialIndex) -> DataFrame:
-    """Per-cell union bbox + live count (no blobs touched) — the cached
-    Spark-side stats table (index.cell_stats); nothing is collected to
-    the driver, so pruning scales to arbitrary cell counts."""
-    return index.cell_stats()
-
-
 def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
                 cond, ext=None, contained=None) -> DataFrame:
     """query-shapes ⋈ cell-stats, pruned hierarchically.
@@ -168,7 +161,7 @@ def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
     levels = index.stats_pyramid()  # fine+1 .. coarsest
     if not levels:
         pairs = enum_top(qdf, grid.g, grid.cw)
-        return pairs.join(_cell_stats_df(index), "cell").filter(cond)
+        return pairs.join(index.cell_stats(), "cell").filter(cond)
 
     qcols = qdf.columns
     topg, topcw, _ = levels[-1]
@@ -193,7 +186,7 @@ def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
                     .selectExpr(
                         "*", f"{grid.compose_sql(ccols, childg)} AS cell")
                     .drop(*ccols))
-    out = frontier.join(_cell_stats_df(index), "cell").filter(cond)
+    out = frontier.join(index.cell_stats(), "cell").filter(cond)
     for e in emitted:
         out = out.unionByName(e.select(*out.columns))
     return out

@@ -26,10 +26,40 @@ def _package_zip() -> str:
     return out
 
 
+_CGROUP_MEM_LIMITS = ("/sys/fs/cgroup/memory.max",                  # v2
+                      "/sys/fs/cgroup/memory/memory.limit_in_bytes")  # v1
+
+
+def _memory_limit() -> int:
+    """Bytes this process may use: physical RAM, or the container's
+    cgroup memory limit when that is smaller."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEM_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            ram = min(ram, int(limit))
+    return ram
+
+
+def default_driver_memory() -> str:
+    """Half of the memory this process may use (_memory_limit), capped
+    at 48g (the driver is also every local[N] executor, and shares the
+    host with Python UDF workers)."""
+    return f"{max(1, min(48, _memory_limit() // 2 // 2**30))}g"
+
+
 def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """Local session sized to this host unless SPARK_GRAFT_CPUS /
+    SPARK_GRAFT_DRIVER_MEM (or `cpus`) say otherwise: one task slot per
+    CPU this process may run on, and default_driver_memory()."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     b = (
@@ -43,7 +73,9 @@ def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                               default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -14,22 +14,15 @@ from kdtree_spark.localtree import LocalKDTree
 from kdtree_spark.queries.knn import knn_candidates, knn_join
 
 
-def _d3_points(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_t2_li")
-    return spark.sql(
-        f"SELECT {points.PID_SQL} AS pid, {points.UNIFORM_X_SQL} AS x, "
-        f"{points.UNIFORM_Y_SQL} AS y, {points.UNIFORM_Z_SQL} AS z "
-        f"FROM _t2_li")
-
-
 def test_update_d3_vs_bruteforce(spark, sf_dir):
     """Insert + delete on a 3-D index, then kNN — vs numpy brute force."""
-    pts = _d3_points(spark, sf_dir)
+    pts = (points.load_points(spark, sf_dir, dims=3)
+           .select("pid", "x", "y", "z"))
     idx = SpatialIndex.build(spark, pts, grid=Grid(4),
                              coord_cols=("x", "y", "z"))
-    ins = spark.sql(points.insert_batch_d3_sql("_t2_li"))
-    dele = spark.sql(points.delete_batch_d3_sql("_t2_li"))
+    view = points.lineitem_view(spark, sf_dir)
+    ins = spark.sql(points.insert_batch_sql(view, dims=3))
+    dele = spark.sql(points.delete_batch_sql(view, dims=3))
     idx2 = idx.update(inserts=ins, deletes=dele)
 
     pd_all = pts.toPandas()

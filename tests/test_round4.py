@@ -20,10 +20,7 @@ from kdtree_spark.queries.ranges import (circle_count, range_count,
 
 def _pts_d(spark, sf_dir, d):
     cc = list(points.dim_cols(d))
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_r4_lineitem")
-    return spark.sql(
-        f"SELECT {points.dimd_select_sql(d)} FROM _r4_lineitem"), cc
+    return points.load_points(spark, sf_dir, dims=d).select("pid", *cc), cc
 
 
 def _rand_boxes(rng, n, d, wlo, whi):
@@ -212,7 +209,7 @@ def test_f64_epsilon_comparator_divergence():
     else:
         # exact-IEEE rule: strictly smaller d² wins -> id 2; the
         # reference's epsilon rule would pick id 1 here. This is the
-        # documented divergence (spatial.py q_knn_k10_f64 docstring).
+        # documented divergence (spatial.py F64 spec comment).
         assert nid[0, 0] == 2
     # gap >= eps (relative): rules agree — nearer point wins under both
     pts2 = np.array([[1.0, 0.0], [1.0 + 1e-16 + eps, 0.0]])

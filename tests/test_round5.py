@@ -375,7 +375,7 @@ def test_hot_cell_knn_gate_fans_out_and_is_exact(spark):
     from kdtree_spark.queries.skew import FANOUT_MIN_BLOBS, hot_blobs
 
     sf_dir = "/root/testdata/sf0.01"
-    got = (dq.q_hot_cell_knn(spark, sf_dir).toPandas()
+    got = (dq.QUERIES["hot_cell_knn"](spark, sf_dir).toPandas()
            .sort_values(["qid", "rank"]))
     idx = dq._INDEX_CACHE[(id(spark), sf_dir, "varden_hot512")]
     maxblobs = (idx.cell_stats().agg(F.max("maxsalt")).collect()[0][0]) + 1

@@ -122,8 +122,9 @@ def test_knn_ood(built, spark, sf_dir):
 
 def test_update_then_query(built, spark, sf_dir):
     dist, idx, pts_pd = built
-    ins = spark.sql(points.insert_batch_sql("_pts_lineitem"))
-    dele = spark.sql(points.delete_batch_sql("_pts_lineitem", dist))
+    view = points.lineitem_view(spark, sf_dir)
+    ins = spark.sql(points.insert_batch_sql(view))
+    dele = spark.sql(points.delete_batch_sql(view, dist=dist))
     idx2 = idx.update(inserts=ins, deletes=dele)
 
     ins_pd = ins.toPandas()
@@ -174,17 +175,11 @@ def test_knn_d3_vs_bruteforce(spark, sf_dir):
     from kdtree_spark.index import SpatialIndex
     from kdtree_spark.queries.knn import knn_join
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_t3_li")
-    pts3 = spark.sql(
-        f"SELECT {P.PID_SQL} AS pid, {P.UNIFORM_X_SQL} AS x, "
-        f"{P.UNIFORM_Y_SQL} AS y, {P.UNIFORM_Z_SQL} AS z FROM _t3_li")
+    pts3 = (P.load_points(spark, sf_dir, dims=3)
+            .select("pid", "x", "y", "z"))
     idx = SpatialIndex.build(spark, pts3, grid=Grid(4),
                              coord_cols=("x", "y", "z"))
-    q = spark.sql(
-        f"SELECT {P.PID_SQL} AS qid, {P.UNIFORM_X_SQL} AS x, "
-        f"{P.UNIFORM_Y_SQL} AS y, {P.UNIFORM_Z_SQL} AS z FROM _t3_li "
-        f"WHERE {P.QUERY_FILTER_SQL}").limit(20)
+    q = P.load_query_points(spark, sf_dir, dims=3).limit(20)
     got = (knn_join(idx, q, 5).toPandas()
            .sort_values(["qid", "rank"]).reset_index(drop=True))
     allp = pts3.toPandas()
@@ -208,14 +203,10 @@ def test_knn_d16_vs_bruteforce(spark, sf_dir):
     from kdtree_spark.queries.knn import knn_join
 
     cols = list(P.dim_cols(16))
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_t16_li")
-    pts16 = spark.sql(f"SELECT {P.dimd_select_sql(16)} FROM _t16_li")
+    pts16 = P.load_points(spark, sf_dir, dims=16).select("pid", *cols)
     idx = SpatialIndex.build(spark, pts16, grid=Grid(4),
                              coord_cols=tuple(cols))
-    q = spark.sql(
-        f"SELECT {P.dimd_select_sql(16, 'qid')} FROM _t16_li "
-        f"WHERE {P.QUERY_FILTER_SQL}").limit(15)
+    q = P.load_query_points(spark, sf_dir, dims=16).limit(15)
     got = (knn_join(idx, q, 5).toPandas()
            .sort_values(["qid", "rank"]).reset_index(drop=True))
     allp = pts16.toPandas()
