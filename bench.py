@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): run the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on a local session
+sized by get_spark ($SPARK_GRAFT_CPUS, else the CPUs this process may
+run on) and print ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -42,8 +43,7 @@ HEADLINE = HEADLINE_SPATIAL + HEADLINE_PIPELINE
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf0.1"))
@@ -57,8 +57,8 @@ def main() -> None:
     from kdtree_spark.index import SpatialIndex
     from kdtree_spark.session import get_spark
 
-    spark = get_spark("bench", cpus=args.cpus,
-                      shuffle_partitions=max(args.cpus, 8))
+    spark = get_spark("bench", cpus=args.cpus)
+    cpus = spark.sparkContext.defaultParallelism
     # defensive: if a prior phase (correctness sweep) shares this
     # session, its cached tables (driver_queries index/image caches)
     # would occupy executor storage and evict/skew bench timings
@@ -245,7 +245,7 @@ def main() -> None:
         from kdtree_spark.queries.knn import knn_shipped_blobs
         from kdtree_spark.queries.ranges import range_count
         n1 = 6_000_000
-        p1 = points.synth_points(spark, n1, parts=args.cpus)
+        p1 = points.synth_points(spark, n1, parts=cpus)
 
         def best2(fn):
             t0 = time.time()
@@ -273,7 +273,7 @@ def main() -> None:
         extras["sf1_build_sec"] = round(min(t_b1, time.time() - t0), 3)
         extras["sf1_build_rows_per_sec"] = round(
             n1 / extras["sf1_build_sec"], 1)
-        q1 = (points.synth_points(spark, n1 // 100, parts=args.cpus)
+        q1 = (points.synth_points(spark, n1 // 100, parts=cpus)
               .selectExpr("pid AS qid", "x", "y"))
         extras["sf1_knn_k10_sec"] = round(
             best2(lambda: knn_join(idx1, q1, 10).count()), 3)
@@ -302,7 +302,7 @@ def main() -> None:
         "unit": "sec",
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "sf": sf,
-        "cpus": args.cpus,
+        "cpus": cpus,
         "rows": n_rows,
         "protocol": {"all": "best_of_2", "sf1_leg": "best_of_2"},
         "trials": trials,

@@ -286,7 +286,7 @@ def range_gate(op, spec: PointSpec, shapes, inserts: bool = False,
 def q_cell_assign(spark, sf_dir) -> DataFrame:
     """B4: vectorized cell-id assignment, aggregated per cell."""
     pts = points.load_points(spark, sf_dir, "uniform")
-    return (pts.selectExpr(f"{Grid(GRID_G).spark_cell_sql()} AS cell")
+    return (pts.selectExpr(f"{Grid(GRID_G).cell_sql(['x', 'y'])} AS cell")
             .groupBy("cell").agg(F.count("*").alias("cnt")))
 
 

@@ -82,7 +82,7 @@ class Grid:
     def child_ranges_sql(self, cell: str, parent_g: int, fac: int,
                          child_g: int) -> list:
         """Per-dim (lo, hi) SQL for the children of a coarse cell on the
-        child grid — plug into explode(sequence(lo, hi))."""
+        child grid — the `ranges` of explode_cells."""
         out = []
         for j in range(self.dims):
             p = self.coord_sql(cell, j, parent_g)
@@ -98,38 +98,68 @@ class Grid:
             expr = f"({expr} * {g} + {c})"
         return expr
 
-    # -- Spark SQL expression (string; plug into F.expr / selectExpr)
-    def spark_cell_sql(self, x: str = "x", y: str = "y") -> str:
-        return self.spark_cell_sql_nd([x, y] if self.dims == 2 else None)
+    # -- point -> cell and extent -> covered cells (Spark SQL). Int mode
+    # divides with DIV; f64 mode floors an IEEE double divide — Spark,
+    # DuckDB and numpy floor the SAME correctly-rounded quotient, so
+    # the three agree bit-for-bit on every input.
+    @staticmethod
+    def _div_sql(v: str, cw: int, f64: bool) -> str:
+        if f64:
+            return f"CAST(FLOOR({v} / CAST({cw} AS DOUBLE)) AS BIGINT)"
+        return f"({v} DIV {cw})"
 
-    def spark_cell_sql_nd(self, cols) -> str:
-        """Row-major cell id over the first `dims` coordinate columns."""
+    def cell_sql(self, cols, f64: bool = False) -> str:
+        """Row-major home cell of a point over the first `dims`
+        coordinate columns (in-domain coords, so no clamp)."""
         assert len(cols) >= self.dims, (cols, self.dims)
-        expr = f"({cols[0]} DIV {self.cw})"
-        for c in cols[1:self.dims]:
-            expr = f"({expr} * {self.g} + ({c} DIV {self.cw}))"
-        return expr
+        return self.compose_sql([self._div_sql(c, self.cw, f64)
+                                 for c in cols[:self.dims]])
+
+    def clamp_sql(self, v: str, level=None, f64: bool = False) -> str:
+        """Grid coordinate of coordinate expr `v` on the (g, cw) `level`
+        (default: this grid), clamped to [0, g-1] — THE cover rule.
+        Monotone, so lo <= hi maps to an ascending in-grid range that
+        never aliases; truncating DIV and floor agree under it."""
+        g, cw = level or (self.g, self.cw)
+        return (f"LEAST(GREATEST({self._div_sql(f'({v})', cw, f64)}, 0), "
+                f"{g - 1})")
+
+    def explode_cells(self, df, ranges, out: str, g: int):
+        """df with one row per cell of the per-dim inclusive grid-
+        coordinate `ranges` [(lo_sql, hi_sql), ...], its row-major id
+        (on a g-per-dim grid) in column `out` (replacing any old one)."""
+        cols = []
+        for j, (lo, hi) in enumerate(ranges):
+            df = df.selectExpr(
+                "*", f"explode(sequence({lo}, {hi})) AS _c{j}")
+            cols.append(f"_c{j}")
+        return (df.drop(out)
+                .selectExpr("*", f"{self.compose_sql(cols, g)} AS {out}")
+                .drop(*cols))
+
+    def cover(self, df, ext, out: str, level=None, f64: bool = False):
+        """df with one row per grid cell covered by each row's extent
+        `ext` = per-gridded-dim (lo_sql, hi_sql) coordinate exprs, both
+        ends clamped (clamp_sql). Off-grid extents land on the boundary
+        cells, so callers keep their exact predicate after the join."""
+        ranges = [(self.clamp_sql(lo, level, f64),
+                   self.clamp_sql(hi, level, f64)) for lo, hi in ext]
+        return self.explode_cells(df, ranges, out,
+                                  level[0] if level else self.g)
 
     # -- DuckDB SQL (oracle side)
     def duckdb_cell_sql(self, x: str = "x", y: str = "y") -> str:
         assert self.dims == 2
         return f"(({x} // {self.cw}) * {self.g} + ({y} // {self.cw}))"
 
-    # float-coordinate variants: FLOOR(x / cw) over an IEEE double
-    # divide — Spark, DuckDB and numpy floor the SAME correctly-rounded
-    # quotient, so the three agree bit-for-bit on every input (what
-    # matters is cross-engine consistency, not the exact boundary)
-    def spark_cell_sql_f64_nd(self, cols) -> str:
-        assert len(cols) >= self.dims, (cols, self.dims)
-        def fl(c):
-            return (f"CAST(FLOOR({c} / CAST({self.cw} AS DOUBLE)) "
-                    f"AS BIGINT)")
-        expr = fl(cols[0])
-        for c in cols[1:self.dims]:
-            expr = f"(({expr}) * {self.g} + {fl(c)})"
-        return expr
-
     # -- numpy
+    def clamp_np(self, v: np.ndarray, f64: bool = False) -> np.ndarray:
+        """numpy mirror of clamp_sql on this grid: the clamped grid
+        coordinate of coordinates `v` (floor division; under the clamp
+        it agrees with Spark's truncating DIV)."""
+        q = np.floor(v / self.cw) if f64 else v // self.cw
+        return np.clip(q, 0, self.g - 1).astype(np.int64)
+
     def cell_coord(self, cell: np.ndarray, j: int) -> np.ndarray:
         """j-th grid coordinate of a row-major cell id (numpy)."""
         c = cell // (self.g ** (self.dims - 1 - j))

@@ -97,6 +97,14 @@ def _probe_cap(d: int, n_live: int) -> int:
     return max(floor, n_live // PROBE_FRACTION)
 
 
+def stats_cols(d: int) -> tuple[list, list]:
+    """(lo, hi) data-bbox column names of the cell / super-cell /
+    pyramid stats tables over d coordinate dims."""
+    lo = ["xmin", "ymin"] + [f"mn{j}" for j in range(2, d)]
+    hi = ["xmax", "ymax"] + [f"mx{j}" for j in range(2, d)]
+    return lo, hi
+
+
 def _coarsen_aggs(d: int) -> list:
     """Aggregates that coarsen per-cell stats (ccnt, data bbox, and the
     mn{j}/mx{j} bounds of dims >= 2) onto a coarser grid."""
@@ -214,13 +222,12 @@ class SpatialIndex:
         cols = list(coord_cols)
         if fmode:
             cexprs = [f"CAST({c} AS double) AS {c}" for c in coord_cols]
-            cell_sql = grid.spark_cell_sql_f64_nd(cols)
         else:
             # int32 coords/cell through the shuffle + Arrow hop (coords
             # are < 1e6, cell < g^dims < 2^31): 1/3 fewer bytes on the
             # hot path
             cexprs = [f"CAST({c} AS int) AS {c}" for c in coord_cols]
-            cell_sql = grid.spark_cell_sql_nd(cols)
+        cell_sql = grid.cell_sql(cols, fmode)
         cell_t = "int" if grid.g ** grid.dims < 2 ** 31 else "long"
         pts = points.selectExpr(
             "pid", *cexprs, f"CAST({cell_sql} AS {cell_t}) AS cell")
@@ -254,17 +261,6 @@ class SpatialIndex:
         idx = cls(spark, grid, df, manifest, coord_cols=coord_cols)
         idx._cached_frames = [df]
         return idx
-
-    def cell_sql(self, x: str, y: str) -> str:
-        """Grid-cell SQL matching this index's coordinate mode (2-D
-        grids; d>2 coord columns beyond the grid dims are ignored)."""
-        return self.cell_sql_nd([x, y])
-
-    def cell_sql_nd(self, cols) -> str:
-        """Grid-cell SQL over coordinate column names (first grid.dims
-        are keyed), matching this index's coordinate mode."""
-        return (self.grid.spark_cell_sql_f64_nd(cols) if self.float_coords
-                else self.grid.spark_cell_sql_nd(cols))
 
     # ------------------------------------------------------------------ stats
     def stats(self) -> pd.DataFrame:
@@ -421,7 +417,7 @@ class SpatialIndex:
         cc = list(self.coord_cols)
         cdt = np.float64 if self.float_coords else np.int64
         schema = INDEX_SCHEMA_F64 if self.float_coords else INDEX_SCHEMA
-        cell_sql = self.cell_sql_nd(cc)
+        cell_sql = grid.cell_sql(cc, self.float_coords)
         parts = []
         if inserts is not None:
             parts.append(inserts.selectExpr(
@@ -560,8 +556,8 @@ class SpatialIndex:
             try:
                 if st is not None:
                     st.unpersist()
-            except Exception:
-                pass
+            except Exception as ex:
+                log.warning("could not unpersist a stats table: %s", ex)
         succ_cached = successor._cached_frames if successor is not None else []
         succ_keys = (set(successor._ckpt_handles)
                      if successor is not None else set())
@@ -569,14 +565,16 @@ class SpatialIndex:
             if not any(fr is sc for sc in succ_cached):
                 try:
                     fr.unpersist()
-                except Exception:
-                    pass
+                except Exception as ex:
+                    log.warning("could not unpersist a cached blob frame: "
+                                "%s", ex)
         for key, h in self._ckpt_handles.items():
             if key not in succ_keys and h is not None:
                 try:
                     h.unpersist(False)
-                except Exception:
-                    pass
+                except Exception as ex:
+                    log.warning("could not free checkpoint RDD %s: %s",
+                                key, ex)
 
     # -------------------------------------------------------------- persist
     def save(self, path: str) -> str:

@@ -12,10 +12,10 @@ batched over the whole left table instead of a handed-in query list.
 Physical design (the 100 TB shape):
 - The RIGHT side keeps its single home grid cell (one row per point).
 - The LEFT side expands to every cell its radius-r box overlaps via
-  `sequence() x explode` per dimension — pure Spark SQL, clipped to
-  the grid, ((2r/cw) + 2)^d cells per row, so ~1-4 cells when the
-  grid is sized with cell width >= r (Grid.for_count at the caller,
-  or the default below).
+  `Grid.cover` (`sequence() x explode` per dimension) — pure Spark
+  SQL, clamped to the grid, ((2r/cw) + 2)^d cells per row, so ~1-4
+  cells when the grid is sized with cell width >= r (Grid.for_count
+  at the caller, or the default below).
 - One hash-partitioned equi-join on the composed cell id, then the
   exact JVM-side predicate sum_j (lx_j - rx_j)^2 <= r^2. Everything
   stays inside whole-stage codegen: NO Python boundary, NO broadcast
@@ -36,27 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..grid import COORD_LIMIT, Grid
-
-
-def _expand_cells_sql(grid: Grid, cols, r, float_coords: bool = False
-                      ) -> list:
-    """Per-dimension cell-range bounds [(lo_expr, hi_expr), ...] for the
-    radius-r box around a point, clipped to the grid. Float mode uses
-    the same FLOOR-division arithmetic as Grid.spark_cell_sql_f64_nd,
-    so expansion and home cells agree bit-for-bit."""
-    cw, g = grid.cw, grid.g
-    out = []
-    for c in cols[:grid.dims]:
-        if float_coords:
-            lo = (f"GREATEST(CAST(FLOOR(({c} - {r}) / "
-                  f"CAST({cw} AS DOUBLE)) AS BIGINT), 0)")
-            hi = (f"LEAST(CAST(FLOOR(({c} + {r}) / "
-                  f"CAST({cw} AS DOUBLE)) AS BIGINT), {g - 1})")
-        else:
-            lo = f"GREATEST(({c} - {r}) DIV {cw}, 0)"
-            hi = f"LEAST(({c} + {r}) DIV {cw}, {g - 1})"
-        out.append((lo, hi))
-    return out
 
 
 def distance_join(left: DataFrame, right: DataFrame, r: int,
@@ -97,21 +76,11 @@ def distance_join(left: DataFrame, right: DataFrame, r: int,
     lt = left.select(F.col(left_id).alias("_lid"),
                      *[F.col(c).alias(a) for c, a in zip(cc, lcc)],
                      *keep_left)
-    cell_sql = (grid.spark_cell_sql_f64_nd(cc) if float_coords
-                else grid.spark_cell_sql_nd(cc))
-    rt = right.select(F.col(right_id).alias("_rid"),
-                      *cc, *keep_right,
-                      F.expr(cell_sql).alias("_cell"))
-    # left expansion: one explode per grid dim, then compose the cell id
-    bounds = _expand_cells_sql(grid, lcc, r, float_coords)
-    for j, (lo, hi) in enumerate(bounds):
-        lt = lt.withColumn(f"_g{j}",
-                           F.explode(F.sequence(F.expr(lo), F.expr(hi))))
-    cell = "_g0"
-    for j in range(1, grid.dims):
-        cell = f"(({cell}) * {grid.g} + _g{j})"
-    lt = lt.withColumn("_cell", F.expr(cell)).drop(
-        *[f"_g{j}" for j in range(grid.dims)])
+    rt = right.select(F.col(right_id).alias("_rid"), *cc, *keep_right,
+                      F.expr(grid.cell_sql(cc, float_coords)).alias("_cell"))
+    # left expansion: every cell the radius-r box around the point covers
+    ext = [(f"{c} - {r}", f"{c} + {r}") for c in lcc[:grid.dims]]
+    lt = grid.cover(lt, ext, "_cell", f64=float_coords)
     d2 = None
     for c, a in zip(cc, lcc):
         t = F.col(a) - F.col(c)
@@ -136,7 +105,7 @@ def rect_join(left: DataFrame, right: DataFrame,
     Physical design: partition-based spatial merge (the PBSM family,
     Patel & DeWitt SIGMOD'96 — public literature) rendered as one Spark
     equi-join. BOTH sides expand to their covered grid cells
-    (sequence() x explode, clipped), join on the cell id, then the
+    (Grid.cover, clamped), join on the cell id, then the
     exact overlap predicate. Duplicate avoidance is the standard
     reference-point trick: a pair is emitted only by the single cell
     containing the intersection's min corner (GREATEST of the two min
@@ -144,43 +113,40 @@ def rect_join(left: DataFrame, right: DataFrame,
     with one shuffle per side and everything in whole-stage codegen.
     Planar (d=2), like the raster tiles it serves.
     """
-    grid = grid or Grid(16)
+    b = dict(zip(("x0", "y0", "x1", "y1"), bounds))
+
+    def side(df, idc):
+        return df.select(F.col(idc), *[F.col(b[c]).alias(f"_{idc}_{c}")
+                                       for c in ("x0", "y0", "x1", "y1")])
+
+    return (bbox_pairs(side(left, left_id), side(right, right_id),
+                       left_id, right_id, grid or Grid(16))
+            .select(left_id, right_id))
+
+
+def bbox_pairs(lt: DataFrame, rt: DataFrame, left_id: str, right_id: str,
+               grid: Grid) -> DataFrame:
+    """The PBSM core shared by rect_join and polygon_join: lt / rt carry
+    each row's bbox as _{id}_x0, _{id}_y0, _{id}_x1, _{id}_y1; both sides
+    cover their bbox's grid cells, equi-join on the cell id and keep
+    each overlapping pair once — in the cell holding the intersection's
+    min corner, clamped by the same rule as the covers, so an off-grid
+    corner lands on the boundary cell both covers reach."""
     assert grid.dims == 2
-    cw, g = grid.cw, grid.g
-
-    def expand(df, idc):
-        b = dict(zip(("x0", "y0", "x1", "y1"), bounds))
-        out = df.select(
-            F.col(idc), *[F.col(b[c]).alias(f"_{idc}_{c}")
-                          for c in ("x0", "y0", "x1", "y1")])
-        for ax, c0, c1 in (("cx", f"_{idc}_x0", f"_{idc}_x1"),
-                           ("cy", f"_{idc}_y0", f"_{idc}_y1")):
-            out = out.withColumn(f"_{ax}", F.explode(F.sequence(
-                F.expr(f"GREATEST({c0} DIV {cw}, 0)"),
-                F.expr(f"LEAST({c1} DIV {cw}, {g - 1})"))))
-        return (out.withColumn("_cell",
-                               F.col("_cx") * g + F.col("_cy"))
-                .drop("_cx", "_cy"))
-
-    lt = expand(left, left_id)
-    rt = expand(right, right_id)
     lx0, ly0, lx1, ly1 = [f"_{left_id}_{c}" for c in ("x0", "y0",
                                                       "x1", "y1")]
     rx0, ry0, rx1, ry1 = [f"_{right_id}_{c}" for c in ("x0", "y0",
                                                        "x1", "y1")]
     overlap = F.expr(f"{lx0} <= {rx1} AND {rx0} <= {lx1} AND "
                      f"{ly0} <= {ry1} AND {ry0} <= {ly1}")
-    # intersection min corner must fall in THIS cell (clipped like the
-    # expansions, so fully off-grid corners still land on the owning
-    # boundary cell consistently with both expansions)
-    ref = F.expr(
-        f"LEAST(GREATEST(GREATEST({lx0}, {rx0}) DIV {cw}, 0), {g - 1})"
-        f" * {g} + "
-        f"LEAST(GREATEST(GREATEST({ly0}, {ry0}) DIV {cw}, 0), {g - 1})")
+    ref = F.expr(grid.compose_sql([
+        grid.clamp_sql(f"GREATEST({lx0}, {rx0})"),
+        grid.clamp_sql(f"GREATEST({ly0}, {ry0})")]))
+    lt = grid.cover(lt, [(lx0, lx1), (ly0, ly1)], "_cell")
+    rt = grid.cover(rt, [(rx0, rx1), (ry0, ry1)], "_cell")
     return (lt.join(rt, "_cell")
             .filter(overlap)
-            .filter(F.col("_cell") == ref)
-            .select(left_id, right_id))
+            .filter(F.col("_cell") == ref))
 
 
 def kernel_density(queries: DataFrame, data: DataFrame, r: int,

@@ -66,10 +66,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..index import SpatialIndex
+from ..index import SpatialIndex, stats_cols
 from ..localtree import LocalKDTree
-from .skew import hot_blobs as _hot_blobs
-from .skew import split_by_salt as _split_by_salt
+from .skew import pruned_blob_sides, scan_blobs
 
 
 def _group_knn(qpts: np.ndarray, blobs, k: int, ub: np.ndarray | None,
@@ -123,13 +122,6 @@ def _bbox_exprs(cc: list, lo_cols: list, hi_cols: list):
     return mind2, maxd2
 
 
-def _super_cols(cc: list):
-    d = len(cc)
-    lo = ["xmin", "ymin"] + [f"mn{j}" for j in range(2, d)]
-    hi = ["xmax", "ymax"] + [f"mx{j}" for j in range(2, d)]
-    return lo, hi
-
-
 def _cdt(index: SpatialIndex):
     return np.float64 if index.float_coords else np.int64
 
@@ -158,25 +150,21 @@ def _enum_rows(q: list, ub: np.ndarray, grid, fmode: bool):
     it always survives the stats join) and the merge window can be
     bypassed without ever counting candidates per query. Pure
     arithmetic — no metadata needed; work proportional to output."""
-    g, cw, gd = grid.g, grid.cw, grid.dims
+    g, gd = grid.g, grid.dims
     n = len(ub)
     finite = np.isfinite(ub)
+    # +1 guards the (theoretical) downward rounding of sqrt at the
+    # boundary; over-coverage is corrected by the bbox join
     if fmode:
-        # float cells: floor(x / cw), mirroring the cell assignment
-        # formula (Grid.spark_cell_sql_f64_nd)
         r = np.zeros(n)
         r[finite] = np.sqrt(ub[finite]) + 1.0
-        c0 = [np.clip(np.floor((qj - r) / cw), 0, g - 1)
-              .astype(np.int64) for qj in q]
-        c1 = [np.clip(np.floor((qj + r) / cw), 0, g - 1)
-              .astype(np.int64) for qj in q]
     else:
-        # +1 guards the (theoretical) downward rounding of sqrt at the
-        # boundary; over-coverage is corrected by the bbox join
         r = np.zeros(n, np.int64)
         r[finite] = np.floor(np.sqrt(ub[finite])).astype(np.int64) + 1
-        c0 = [np.clip((qj - r) // cw, 0, g - 1) for qj in q]
-        c1 = [np.clip((qj + r) // cw, 0, g - 1) for qj in q]
+    # the cube's clamped per-dim cell ranges (the numpy mirror of
+    # Grid.cover, so float cells floor exactly like Grid.cell_sql)
+    c0 = [grid.clamp_np(qj - r, fmode) for qj in q]
+    c1 = [grid.clamp_np(qj + r, fmode) for qj in q]
     nper = [h - l + 1 for l, h in zip(c0, c1)]
     ncand = nper[0].copy()
     for nj in nper[1:]:
@@ -237,7 +225,7 @@ def _seed_enum(index: SpatialIndex, queries: DataFrame, cc: list, k: int
     gd = grid.dims
     fmode = index.float_coords
     home = queries.selectExpr(
-        "qid", *cc, f"{index.cell_sql_nd(cc)} AS cell")
+        "qid", *cc, f"{grid.cell_sql(cc, index.float_coords)} AS cell")
     probes = index.probes().join(
         F.broadcast(home.select("cell").distinct()), "cell", "semi")
     out_schema = (f"qid long, {coord_schema}, ub double, cell long, "
@@ -303,8 +291,7 @@ def _super_prefix_ub(index: SpatialIndex, needy: DataFrame, cc: list,
     within that maxd2 -> valid bound. Enumeration is TOTAL (every super
     cell), so ub = inf only when the index has < k live points."""
     sup = index.super_stats()
-    slo, shi = _super_cols(cc)
-    _, maxd2_s = _bbox_exprs(cc, slo, shi)
+    _, maxd2_s = _bbox_exprs(cc, *stats_cols(len(cc)))
     wq = Window.partitionBy("qid")
     wcum = (wq.orderBy(F.col("maxd2").asc(), F.col("scell").asc())
             .rowsBetween(Window.unboundedPreceding, 0))
@@ -333,10 +320,9 @@ def _candidate_cells(index: SpatialIndex, enum: DataFrame, cc: list
     with the query's true candidate region, never with total cell
     count."""
     grid = index.grid
-    g = grid.g
     stats = index.cell_stats()
-    slo, shi = _super_cols(cc)
-    mind2, _ = _bbox_exprs(cc, slo, shi)  # fine stats share these names
+    # fine and super-cell stats share these column names
+    mind2, _ = _bbox_exprs(cc, *stats_cols(len(cc)))
     # fin0 is the enumeration-time single-candidate flag (see
     # _enum_rows) consumed by knn_join's merge bypass
     keep = ["qid", *cc, "ub", "cell", "maxsalt", "fin0"]
@@ -349,20 +335,11 @@ def _candidate_cells(index: SpatialIndex, enum: DataFrame, cc: list
     far = enum.filter(F.col("cell") < 0).drop("cell")
     sup = index.super_stats()
     S, sg = index.super_grid()
-    mind2_s, _ = _bbox_exprs(cc, slo, shi)
     fsup = (far.crossJoin(F.broadcast(sup))
-            .filter(mind2_s <= F.col("ub"))
+            .filter(mind2 <= F.col("ub"))
             .select("qid", *cc, "ub", "fin0", "scell"))
-    children = fsup
-    child_cols = []
-    for j, (lo, hi) in enumerate(
-            index.grid.child_ranges_sql("scell", sg, S, g)):
-        children = children.selectExpr(
-            "*", f"explode(sequence({lo}, {hi})) AS _c{j}")
-        child_cols.append(f"_c{j}")
-    children = children.selectExpr(
-        "qid", *cc, "ub", "fin0",
-        f"{index.grid.compose_sql(child_cols)} AS cell")
+    children = grid.explode_cells(
+        fsup, grid.child_ranges_sql("scell", sg, S, grid.g), "cell", grid.g)
     far_out = (children.join(stats, "cell")
                .filter(mind2 <= F.col("ub")).select(*keep))
     return near_out.unionByName(far_out)
@@ -412,32 +389,16 @@ def knn_candidates(index: SpatialIndex, queries: DataFrame, k: int
     return _candidate_cells(index, enum.unionByName(needy_enum), cc)
 
 
-def _pruned_blob_sides(index: SpatialIndex, cand: DataFrame):
-    """(cold, hot, cold_blobs, hot_blobs): split the checkpointed
-    candidate set by salt and semi-join the blob table down to the
-    distinct candidate cells of each side BEFORE the cogroup — the
-    update() touched-cells pattern (index.py) applied to reads. The
-    broadcast semi-join preserves the cached blob table's
-    hash-partitioning on `cell`, so the cogroup reuses the existing
-    exchange AND only candidate-cell blobs are serialized through
-    Arrow (bytes shipped scale with the query's candidate set, not
-    with index size)."""
-    cold, hot = _split_by_salt(cand)
-    cold_blobs = index.df.join(
-        F.broadcast(cold.select("cell").distinct()), "cell", "semi")
-    hblobs = _hot_blobs(index).join(
-        F.broadcast(hot.select("cell").distinct()), "cell", "semi")
-    return cold, hot, cold_blobs, hblobs
-
-
 def _cell_knn_maker(cc: list, cdt, k: int):
     """Phase-3 kernel factory for knn_join.
 
     allow_fin=True on cold (one group per cell) cogroups: their kernel
     ranks are exact within the group, so a row is final when its
     query's `fin0` flag says the cell was its only candidate. Hot
-    (per-blob) groups never emit fin rows. Cold groups also force the
-    per-blob block-scan bound tighten."""
+    (per-blob, skew.scan_blobs) groups never emit fin rows: per-blob
+    searches lose cross-blob bound tightening, which the exact merge
+    absorbs. Cold groups also force the per-blob block-scan bound
+    tighten."""
     def make_cell_knn(allow_fin: bool):
         def cell_knn(key, qpdf: pd.DataFrame, ipdf: pd.DataFrame
                      ) -> pd.DataFrame:
@@ -462,24 +423,6 @@ def _cell_knn_maker(cc: list, cdt, k: int):
                                  "fin": fin[ok]})
         return cell_knn
     return make_cell_knn
-
-
-def _scan_local(index: SpatialIndex, pairs: DataFrame, kernel_maker,
-                out_schema: str) -> DataFrame:
-    """Run a phase-3 cogroup over candidate (query, cell) pairs: cold
-    cells one group each (kernel allow_fin=True), hot (salted) cells
-    one task per blob so varden-style clustering can't serialize a
-    cell's queries on one task — per-blob searches lose cross-blob
-    bound tightening, which the exact merge absorbs (hot rows are
-    always fin=false)."""
-    cold, hot, cold_blobs, hblobs = _pruned_blob_sides(index, pairs)
-    return (cold.groupby("cell")
-            .cogroup(cold_blobs.groupby("cell"))
-            .applyInPandas(kernel_maker(True), out_schema)
-            .unionByName(
-                hot.groupby("cell", "salt")
-                .cogroup(hblobs.groupby("cell", "salt"))
-                .applyInPandas(kernel_maker(False), out_schema)))
 
 
 def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
@@ -512,7 +455,7 @@ def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
     maker = _cell_knn_maker(cc, cdt, k)
     out_schema = "qid long, nid long, dist_sq double, rank int, fin boolean"
 
-    local = _scan_local(index, cand, maker, out_schema) \
+    local = scan_blobs(index, cand, maker(True), maker(False), out_schema) \
         .localCheckpoint(eager=False)
     done = local.filter(F.col("fin"))
     w = Window.partitionBy("qid").orderBy(F.col("dist_sq").asc(),
@@ -532,7 +475,7 @@ def knn_shipped_blobs(index: SpatialIndex, queries: DataFrame, k: int
     ships through the Arrow cogroup vs the whole index — evidence that
     phase 3's semi-join prunes blob shipping to the candidate set."""
     cand = knn_candidates(index, queries, k).localCheckpoint(eager=True)
-    _, _, cold_blobs, hblobs = _pruned_blob_sides(index, cand)
+    _, _, cold_blobs, hblobs = pruned_blob_sides(index, cand)
     shipped = cold_blobs.unionByName(hblobs)
     srow = shipped.agg(
         F.count("*").alias("rows"),
@@ -578,8 +521,9 @@ def knn_scan_stats(index: SpatialIndex, queries: DataFrame, k: int
                                  "leaves": st["leaves"]})
         return cell_count
 
-    per_cell = _scan_local(index, cand, make_cell_count,
-                           "qid long, scanned long, leaves long")
+    per_cell = scan_blobs(index, cand, make_cell_count(True),
+                          make_cell_count(False),
+                          "qid long, scanned long, leaves long")
     return (per_cell.groupBy("qid")
             .agg(F.sum("scanned").alias("scanned"),
                  F.sum("leaves").alias("leaves")))

@@ -11,17 +11,19 @@ bbox also prunes cells. Small polygon sets broadcast naturally (they are
 literals in the plan).
 
 Raster assignment: a tile's covered cell ids are two integer ranges —
-`sequence() x explode` JVM-side, no UDF, identical arithmetic to the
-DuckDB oracle's generate_series/unnest.
+`Grid.cover` JVM-side, no UDF; for in-domain tiles the same cells as
+the DuckDB oracle's generate_series/unnest.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import polygon_bbox, polygon_pred_sql
 from ..grid import Grid
+from .joins import bbox_pairs
 
 BROADCAST_CELL_CAP = 1_000_000  # max enumerated (polygon, cell) rows to
 # pin as the broadcast join side (~50 MB); beyond it AQE decides
@@ -33,8 +35,8 @@ def point_in_polygon(points: DataFrame, polygons,
 
     -> (poly_id, pid, x, y): every point inside each polygon (inclusive
     of edges). ONE scan, cell-indexed: each polygon's bbox expands to
-    its covered grid cells SPARK-SIDE (`sequence() x explode`, exactly
-    like tile_cell_assign — the driver ships only one tiny row per
+    its covered grid cells SPARK-SIDE (`Grid.cover`, exactly like
+    tile_cell_assign — the driver ships only one tiny row per
     polygon, never O(covered cells), so a domain-sized polygon over a
     1e8-cell grid costs the driver nothing); the join is an equi-join
     on the cell id, and the half-plane conjunction is a JVM-side
@@ -66,32 +68,15 @@ def point_in_polygon(points: DataFrame, polygons,
         rows, "poly_id long, px0 long, py0 long, px1 long, "
               "py1 long, edges array<struct<ax:long, ay:long, dx:long, "
               "dy:long>>")
-    cw, g = grid.cw, grid.g
-    # A bbox entirely off-grid on one axis would clip to start > stop and
-    # sequence() would emit a DESCENDING range (spurious cells); such
-    # polygons contain no points, so drop them before enumerating.
-    on_grid = F.expr(f"px1 >= 0 AND px0 DIV {cw} <= {g - 1} "
-                     f"AND py1 >= 0 AND py0 DIV {cw} <= {g - 1}")
-    cells = (pdf.filter(on_grid)
-             .withColumn("_cx", F.explode(F.sequence(
-                 F.expr(f"GREATEST(px0 DIV {cw}, 0)"),
-                 F.expr(f"LEAST(px1 DIV {cw}, {g - 1})"))))
-             .withColumn("_cy", F.explode(F.sequence(
-                 F.expr(f"GREATEST(py0 DIV {cw}, 0)"),
-                 F.expr(f"LEAST(py1 DIV {cw}, {g - 1})"))))
-             .withColumn("cell", F.col("_cx") * g + F.col("_cy"))
-             .drop("_cx", "_cy"))
+    cells = grid.cover(pdf, [("px0", "px1"), ("py0", "py1")], "cell")
     pts = points.selectExpr("pid", "x", "y",
-                            f"{grid.spark_cell_sql()} AS cell")
-    # exact enumerated (polygon, cell) row count, from the same clipped
-    # bbox arithmetic the explode performs — O(#polygons) driver work
-    n_cells = 0
-    for _, x0, y0, x1, y1, _e in rows:
-        if x1 < 0 or y1 < 0 or x0 // cw > g - 1 or y0 // cw > g - 1:
-            continue
-        ncx = min(x1 // cw, g - 1) - max(x0 // cw, 0) + 1
-        ncy = min(y1 // cw, g - 1) - max(y0 // cw, 0) + 1
-        n_cells += ncx * ncy
+                            f"{grid.cell_sql(['x', 'y'])} AS cell")
+    # exact enumerated (polygon, cell) row count, from the numpy mirror
+    # of the cover's clamp — O(#polygons) driver work
+    b = np.array([r[1:5] for r in rows], np.int64).reshape(-1, 4)
+    n_cells = int(((grid.clamp_np(b[:, 2]) - grid.clamp_np(b[:, 0]) + 1)
+                   * (grid.clamp_np(b[:, 3]) - grid.clamp_np(b[:, 1]) + 1)
+                   ).sum())
     # pin the polygon-cell side as broadcast so the point table never
     # shuffles — but only while that side provably fits an executor
     # (~50 MB at ~48 B/row); beyond the cap, withhold the hint and let
@@ -128,14 +113,14 @@ def tile_cell_assign(spark: SparkSession, grid: Grid, tiles) -> DataFrame:
     tdf = spark.createDataFrame(
         [(int(t), int(a), int(b), int(c), int(d)) for t, a, b, c, d in tiles],
         "tile_id long, tx0 long, ty0 long, tx1 long, ty1 long")
-    cw, g = grid.cw, grid.g
-    return (tdf
-            .withColumn("cx", F.explode(F.sequence(
-                F.expr(f"tx0 DIV {cw}"), F.expr(f"LEAST(tx1 DIV {cw}, {g - 1})"))))
-            .withColumn("cy", F.explode(F.sequence(
-                F.expr(f"ty0 DIV {cw}"), F.expr(f"LEAST(ty1 DIV {cw}, {g - 1})"))))
-            .select("tile_id",
-                    (F.col("cx") * g + F.col("cy")).alias("cell")))
+    # the clamped cover's cells all intersect the tile iff the tile
+    # meets the grid's extent; an off-grid tile covers no cell
+    hi = grid.g * grid.cw - 1
+    on_grid = F.expr(f"tx1 >= 0 AND tx0 <= {hi} "
+                     f"AND ty1 >= 0 AND ty0 <= {hi}")
+    ext = [("tx0", "tx1"), ("ty0", "ty1")]
+    return (grid.cover(tdf.filter(on_grid), ext, "cell")
+            .select("tile_id", "cell"))
 
 
 def tile_cell_assign_sql(grid: Grid, tiles_values_sql: str) -> str:
@@ -194,53 +179,24 @@ def polygon_join(left: DataFrame, right: DataFrame,
 
     Physical plan (the 100 TB shape, same family as rect_join): each
     side expands its vertex-ring bbox to covered grid cells
-    (`sequence() x explode`), one hash equi-join on the cell id,
-    reference-point duplicate avoidance on the bbox-intersection min
-    corner, then the SAT predicate as nested `exists/forall`
+    (`Grid.cover`), one hash equi-join on the cell id, reference-point
+    duplicate avoidance on the bbox-intersection min corner
+    (joins.bbox_pairs), then the SAT predicate as nested `exists/forall`
     higher-order functions — zero Python, no broadcast requirement,
     AQE-splittable on the cell key.
     """
-    grid = grid or Grid(16)
-    assert grid.dims == 2
-    cw, g = grid.cw, grid.g
-
-    def expand(df, idc):
-        out = df.select(
+    def side(df, idc):
+        return df.select(
             F.col(idc), F.col("verts").alias(f"_{idc}_verts"),
-            F.expr("array_min(transform(verts, v -> v.x))")
-            .alias(f"_{idc}_x0"),
-            F.expr("array_min(transform(verts, v -> v.y))")
-            .alias(f"_{idc}_y0"),
-            F.expr("array_max(transform(verts, v -> v.x))")
-            .alias(f"_{idc}_x1"),
-            F.expr("array_max(transform(verts, v -> v.y))")
-            .alias(f"_{idc}_y1"))
-        for ax, c0, c1 in (("cx", f"_{idc}_x0", f"_{idc}_x1"),
-                           ("cy", f"_{idc}_y0", f"_{idc}_y1")):
-            out = out.withColumn(f"_{ax}", F.explode(F.sequence(
-                F.expr(f"GREATEST({c0} DIV {cw}, 0)"),
-                F.expr(f"LEAST({c1} DIV {cw}, {g - 1})"))))
-        return (out.withColumn("_cell", F.col("_cx") * g + F.col("_cy"))
-                .drop("_cx", "_cy"))
+            *[F.expr(f"array_{m}(transform(verts, v -> v.{a}))")
+              .alias(f"_{idc}_{a}{e}")
+              for m, e in (("min", 0), ("max", 1)) for a in ("x", "y")])
 
-    lt = expand(left, left_id)
-    rt = expand(right, right_id)
-    lx0, ly0 = f"_{left_id}_x0", f"_{left_id}_y0"
-    lx1, ly1 = f"_{left_id}_x1", f"_{left_id}_y1"
-    rx0, ry0 = f"_{right_id}_x0", f"_{right_id}_y0"
-    rx1, ry1 = f"_{right_id}_x1", f"_{right_id}_y1"
-    bbox = F.expr(f"{lx0} <= {rx1} AND {rx0} <= {lx1} AND "
-                  f"{ly0} <= {ry1} AND {ry0} <= {ly1}")
-    ref = F.expr(
-        f"LEAST(GREATEST(GREATEST({lx0}, {rx0}) DIV {cw}, 0), {g - 1})"
-        f" * {g} + "
-        f"LEAST(GREATEST(GREATEST({ly0}, {ry0}) DIV {cw}, 0), {g - 1})")
     la, rb = f"_{left_id}_verts", f"_{right_id}_verts"
     intersects = F.expr(
         f"NOT ({_sep_sql(la, rb)} OR {_sep_sql(rb, la)})")
-    return (lt.join(rt, "_cell")
-            .filter(bbox)
-            .filter(F.col("_cell") == ref)
+    return (bbox_pairs(side(left, left_id), side(right, right_id),
+                       left_id, right_id, grid or Grid(16))
             .filter(intersects)
             .select(left_id, right_id))
 

@@ -25,40 +25,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import SpatialIndex
+from ..index import SpatialIndex, stats_cols
 from ..localtree import LocalKDTree
-from .skew import hot_blobs, split_by_salt
-
-
-def _scan_counts(index: SpatialIndex, bnd: DataFrame, scan, schema: str
-                 ) -> DataFrame:
-    """Run the boundary-cell scan cogroup with the cold/hot split: cold
-    cells cogroup on `cell`; hot cells fan out per (cell, salt) blob.
-    Each blob side is first pruned by a broadcast semi-join on its
-    side's distinct boundary cells (the update() touched-cells pattern,
-    index.py) so only boundary-cell blobs are serialized through the
-    Arrow hop — contained and disjoint cells never ship, and bytes
-    scale with the query set's boundary, not with index size. The
-    broadcast semi-join preserves the cached blob table's hash-
-    partitioning on `cell`, keeping the cogroup's exchange reuse.
-    `bnd` must carry `maxsalt` (consumed by the split) and must be
-    checkpointed by the caller (its lineage must not reach index.df, or
-    the semi-join would trip the self-join analyzer); `scan` is
-    additive across a cell's blobs (counts sum / reported rows union),
-    so per-salt partial results compose in the caller's final
-    aggregation."""
-    cold, hot = split_by_salt(bnd)
-    cold_blobs = index.df.join(
-        F.broadcast(cold.select("cell").distinct()), "cell", "semi")
-    hblobs = hot_blobs(index).join(
-        F.broadcast(hot.select("cell").distinct()), "cell", "semi")
-    return (cold.groupby("cell")
-            .cogroup(cold_blobs.groupby("cell"))
-            .applyInPandas(scan, schema)
-            .unionByName(
-                hot.groupby("cell", "salt")
-                .cogroup(hblobs.groupby("cell", "salt"))
-                .applyInPandas(scan, schema)))
+from .knn import _bbox_exprs
+from .skew import scan_blobs
 
 
 def _box_cols(d: int) -> tuple[list, list]:
@@ -70,18 +40,12 @@ def _box_cols(d: int) -> tuple[list, list]:
     return lo, hi
 
 
-def _stats_cols(d: int) -> tuple[list, list]:
-    lo = ["xmin", "ymin"] + [f"mn{j}" for j in range(2, d)]
-    hi = ["xmax", "ymax"] + [f"mx{j}" for j in range(2, d)]
-    return lo, hi
-
-
 def _box_conds(d: int):
     """(overlap, contained) full-d Spark conditions between a box row
     and a stats row — the reference's 3-way box classification
     (range_count.hpp:9-96) as whole-stage-codegen'd SQL."""
     blo, bhi = _box_cols(d)
-    slo, shi = _stats_cols(d)
+    slo, shi = stats_cols(d)
     overlap = contained = F.lit(True)
     for bl, bh, sl, sh in zip(blo, bhi, slo, shi):
         overlap = overlap & (F.col(sl) <= F.col(bh)) \
@@ -132,40 +96,26 @@ def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
 
     Assumes the index's domain contract: coords in [0, COORD_LIMIT)
     (grid.py docstring), so every populated cell id lies in
-    [0, g^dims - 1] and clipped enumeration misses nothing.
+    [0, g^dims - 1] and clamped enumeration misses nothing.
 
-    ext: per-gridded-dim (lo_col, hi_col) column names of the query
-    shape's extent; defaults to the box columns of the grid's dims."""
+    ext: per-gridded-dim (lo, hi) SQL exprs of the query shape's
+    extent (Grid.cover); defaults to the box columns of the grid's
+    dims."""
     from ..index import PYRAMID_FACTOR
     grid = index.grid
-    gd = grid.dims
     if ext is None:
-        blo, bhi = _box_cols(gd)
-        ext = list(zip(blo, bhi))
+        ext = list(zip(*_box_cols(grid.dims)))
     par = index.spark.sparkContext.defaultParallelism
     if n_queries > 4 * par:
         qdf = qdf.repartition(par)
 
-    def enum_top(df, g, cw):
-        def clip(c):  # monotone clip => lo<=hi survives, seq ascends
-            return f"LEAST(GREATEST({c} DIV {cw}, 0), {g - 1})"
-        cols = []
-        for j, (lo, hi) in enumerate(ext):
-            df = df.selectExpr(
-                "*",
-                f"explode(sequence({clip(lo)}, {clip(hi)})) AS _c{j}")
-            cols.append(f"_c{j}")
-        return (df.selectExpr("*", f"{grid.compose_sql(cols, g)} AS cell")
-                .drop(*cols))
-
     levels = index.stats_pyramid()  # fine+1 .. coarsest
     if not levels:
-        pairs = enum_top(qdf, grid.g, grid.cw)
+        pairs = grid.cover(qdf, ext, "cell")
         return pairs.join(index.cell_stats(), "cell").filter(cond)
 
     qcols = qdf.columns
-    topg, topcw, _ = levels[-1]
-    frontier = enum_top(qdf, topg, topcw)
+    frontier = grid.cover(qdf, ext, "cell", level=levels[-1][:2])
     emitted = []
     walk = list(reversed(levels))  # coarsest .. fine+1
     for i, (lg, lcw, stats_l) in enumerate(walk):
@@ -175,17 +125,9 @@ def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
             j = j.filter(~contained)
         childg = walk[i + 1][0] if i + 1 < len(walk) else grid.g
         fac = PYRAMID_FACTOR
-        frontier = j.select(*qcols, "cell")
-        ccols = []
-        for cj, (lo, hi) in enumerate(
-                grid.child_ranges_sql("cell", lg, fac, childg)):
-            frontier = frontier.selectExpr(
-                "*", f"explode(sequence({lo}, {hi})) AS _c{cj}")
-            ccols.append(f"_c{cj}")
-        frontier = (frontier.drop("cell")
-                    .selectExpr(
-                        "*", f"{grid.compose_sql(ccols, childg)} AS cell")
-                    .drop(*ccols))
+        frontier = grid.explode_cells(
+            j.select(*qcols, "cell"),
+            grid.child_ranges_sql("cell", lg, fac, childg), "cell", childg)
     out = frontier.join(index.cell_stats(), "cell").filter(cond)
     for e in emitted:
         out = out.unionByName(e.select(*out.columns))
@@ -229,7 +171,7 @@ def range_count(index: SpatialIndex, boxes) -> DataFrame:
         return pd.DataFrame({"box_id": bpdf["box_id"].to_numpy(np.int64),
                              "cnt": part})
 
-    all_counts = _scan_counts(index, bnd, scan, "box_id long, cnt long") \
+    all_counts = scan_blobs(index, bnd, scan, scan, "box_id long, cnt long") \
         .unionByName(full_counts)
 
     # boxes with zero matches must still appear with cnt=0; broadcast
@@ -279,8 +221,8 @@ def range_report(index: SpatialIndex, boxes) -> DataFrame:
         return pd.concat(outs, ignore_index=True)
 
     coord_schema = ", ".join(f"{c} {ct}" for c in cc)
-    return _scan_counts(index, pairs, scan,
-                        f"box_id long, pid long, {coord_schema}")
+    return scan_blobs(index, pairs, scan, scan,
+                      f"box_id long, pid long, {coord_schema}")
 
 
 def circle_count(index: SpatialIndex, circles) -> DataFrame:
@@ -301,22 +243,10 @@ def circle_count(index: SpatialIndex, circles) -> DataFrame:
     cdf = spark.createDataFrame(pd.DataFrame(cols))
     # circle's bounding box (grid dims) drives the cell enumeration;
     # the exact full-d min-dist² <= r² test below refines it
-    gd = index.grid.dims
-    blo, bhi = _box_cols(gd)
-    cdf = cdf.selectExpr(
-        "*", *[f"{ctr_c[j]} - r AS {blo[j]}" for j in range(gd)],
-        *[f"{ctr_c[j]} + r AS {bhi[j]}" for j in range(gd)])
-    slo, shi = _stats_cols(d)
-    mind2 = maxd2 = None
-    for c, sl, sh in zip(ctr_c, slo, shi):
-        nearc = F.greatest(F.col(sl) - F.col(c), F.col(c) - F.col(sh),
-                           F.lit(0))
-        farc = F.greatest(F.abs(F.col(c) - F.col(sl)),
-                          F.abs(F.col(c) - F.col(sh)))
-        mind2 = nearc * nearc if mind2 is None else mind2 + nearc * nearc
-        maxd2 = farc * farc if maxd2 is None else maxd2 + farc * farc
+    ext = [(f"{c} - r", f"{c} + r") for c in ctr_c[:index.grid.dims]]
+    mind2, maxd2 = _bbox_exprs(ctr_c, *stats_cols(d))
     r2 = F.col("r") * F.col("r")
-    joined = _prune_join(index, cdf, len(circles), mind2 <= r2,
+    joined = _prune_join(index, cdf, len(circles), mind2 <= r2, ext,
                          contained=maxd2 <= r2)
     pairs = joined.withColumn("full", maxd2 <= r2).select(
         "circle_id", *ctr_c, "r", "cell", "ccnt", "full", "maxsalt") \
@@ -338,7 +268,8 @@ def circle_count(index: SpatialIndex, circles) -> DataFrame:
         return pd.DataFrame({"circle_id": cpdf["circle_id"].to_numpy(np.int64),
                              "cnt": part})
 
-    all_counts = _scan_counts(index, bnd, scan, "circle_id long, cnt long") \
+    all_counts = scan_blobs(index, bnd, scan, scan,
+                            "circle_id long, cnt long") \
         .unionByName(full_counts)
     return (cdf.select("circle_id")
             .join(F.broadcast(

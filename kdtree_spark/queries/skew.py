@@ -52,3 +52,40 @@ def split_by_salt(cand: DataFrame) -> tuple[DataFrame, DataFrame]:
                F.sequence(F.lit(0), F.col("maxsalt"))))
            .drop("maxsalt"))
     return cold, hot
+
+
+def pruned_blob_sides(index: SpatialIndex, pairs: DataFrame):
+    """(cold, hot, cold_blobs, hot_blobs): split the (query, cell)
+    `pairs` by salt and semi-join the blob table down to the distinct
+    cells of each side BEFORE the cogroup — the update() touched-cells
+    pattern (index.py) applied to reads. Only those cells' blobs cross
+    the Arrow hop (bytes scale with the queries' cells, not with index
+    size), and the broadcast semi-join preserves the cached blob
+    table's hash-partitioning on `cell`, keeping the cogroup's exchange
+    reuse. `pairs` must carry `maxsalt` (consumed by split_by_salt) and
+    must be checkpointed by the caller (its lineage must not reach
+    index.df, or the semi-join would trip the self-join analyzer)."""
+    cold, hot = split_by_salt(pairs)
+    cold_blobs = index.df.join(
+        F.broadcast(cold.select("cell").distinct()), "cell", "semi")
+    hblobs = hot_blobs(index).join(
+        F.broadcast(hot.select("cell").distinct()), "cell", "semi")
+    return cold, hot, cold_blobs, hblobs
+
+
+def scan_blobs(index: SpatialIndex, pairs: DataFrame, cold_kernel,
+               hot_kernel, schema: str) -> DataFrame:
+    """The one cold/hot blob scan: cold cells cogroup on `cell` (one
+    group per cell, all its blobs) through `cold_kernel`; hot cells one
+    task per (cell, salt) blob through `hot_kernel`. Both kernels must
+    be additive across a cell's blobs (counts sum, reported rows or
+    per-cell top-k union), so per-salt partial results compose in the
+    caller's final aggregation."""
+    cold, hot, cold_blobs, hblobs = pruned_blob_sides(index, pairs)
+    return (cold.groupby("cell")
+            .cogroup(cold_blobs.groupby("cell"))
+            .applyInPandas(cold_kernel, schema)
+            .unionByName(
+                hot.groupby("cell", "salt")
+                .cogroup(hblobs.groupby("cell", "salt"))
+                .applyInPandas(hot_kernel, schema)))

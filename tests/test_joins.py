@@ -165,18 +165,23 @@ def test_rect_join_random(spark, g):
 
 def test_rect_join_edge_touch_and_cell_straddle(spark):
     """Inclusive edges; rects sharing only a boundary line count, and a
-    pair straddling many cells is emitted exactly once."""
+    pair straddling many cells is emitted exactly once — also past the
+    grid's last row, where the covers clamp onto the boundary cells (an
+    unclamped cover aliases cell (1, 31) onto (2, 15): A2/B10 twice)."""
     cw = Grid(16).cw
     A = [(0, 0, 0, 4 * cw, 4 * cw),          # covers 5x5 cells
-         (1, 10, 10, 20, 20)]
+         (1, 10, 10, 20, 20),
+         (2, cw + 5, 31 * cw + 1, 2 * cw + 500, 31 * cw + 100)]
     B = [(7, 4 * cw, 4 * cw, 999_999, 999_999),   # corner-touches A0
          (8, 21, 10, 30, 20),                      # edge-adjacent to A1? (21>20: no)
-         (9, 20, 20, 25, 25)]                      # corner-touches A1
+         (9, 20, 20, 25, 25),                      # corner-touches A1
+         (10, 2 * cw + 6, 31 * cw + 2, 2 * cw + 400, 31 * cw + 50)]
     got = sorted(tuple(r) for r in rect_join(
         _mk_rects(spark, A, "lid"), _mk_rects(spark, B, "rid"),
         grid=Grid(16)).collect())
     assert got == _brute_rects(A, B)
     assert (0, 7) in got and (1, 9) in got and (1, 8) not in got
+    assert (2, 10) in got
 
 
 def test_distance_join_f64(spark):

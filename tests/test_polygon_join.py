@@ -72,14 +72,21 @@ def test_polygon_join_random(spark, g):
 
 def test_polygon_join_containment_and_diagonal_disjoint(spark):
     """Containment (no edge crossings) must match; bbox-overlapping but
-    diagonally-separated pairs must not."""
+    diagonally-separated pairs must not; boxes past the grid's last row
+    pair once, not once per aliased cell."""
     big = [(0, [(0, 0), (100_000, 0), (100_000, 100_000), (0, 100_000)])]
     inner = [(10, [(40_000, 40_000), (60_000, 40_000), (50_000, 60_000)])]
     # triangles whose bboxes overlap but a diagonal axis separates them
     t1 = [(20, [(0, 0), (50_000, 0), (0, 50_000)])]
     t2 = [(30, [(60_000, 60_000), (100_000, 30_000), (100_000, 100_000)])]
-    A = big + t1
-    B = inner + t2
+    cw = Grid(16).cw
+
+    def box(x0, y0, x1, y1):
+        return [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+    off_a = [(40, box(cw + 5, 31 * cw + 1, 2 * cw + 500, 31 * cw + 100))]
+    off_b = [(50, box(2 * cw + 6, 31 * cw + 2, 2 * cw + 400, 31 * cw + 50))]
+    A = big + t1 + off_a
+    B = inner + t2 + off_b
     got = sorted(tuple(r) for r in polygon_join(
         polygons_df(spark, A, "pa"), polygons_df(spark, B, "pb"),
         grid=Grid(16)).collect())
@@ -88,6 +95,7 @@ def test_polygon_join_containment_and_diagonal_disjoint(spark):
     assert got == exp
     assert (0, 10) in got          # containment
     assert (20, 30) not in got     # diagonal separation
+    assert (40, 50) in got         # off-grid, once
 
 
 def test_polygon_join_shared_edge_counts(spark):
